@@ -1,18 +1,20 @@
-"""Vectorized page parse — the hot path.
+"""Page parse — the hot path runs JVM-side (parse_events_native).
 
 The reference decodes one event at a time off a byte cursor
 (/root/reference/reader/reader.go:66-143, binlog/event_rows.go:106-133).
 Here the same header-framing + type-dispatch + payload-decode computation is
-Arrow-batched: html:binary arrives in pandas batches, all regex work runs as
-pandas vectorized .str operations in the latin-1 domain (a bijective
-byte<->codepoint mapping, so extraction is byte-exact — the blob-stays-bytes
-precedent, /root/reference/binlog/event_rows.go:212-223), and one page fans
-out to N typed event rows (the DecodeRows one-event-to-N-rows expansion,
-/root/reference/binlog/event_rows.go:84-103).
+set-oriented: the default engine runs Java regex over the latin-1 view of
+html:binary (a bijective byte<->codepoint mapping, so extraction is
+byte-exact — the reference's blob-stays-bytes precedent,
+binlog/event_rows.go:212-223) inside whole-stage codegen, and one page fans
+out to N typed event rows (the reference's DecodeRows one-event-to-N-rows
+expansion, binlog/event_rows.go:84-103).
 
-Plan shape rules (SURVEY.md §4): cheap native columns (host, lang,
-length(html)) are projected/filtered BEFORE this UDF — Catalyst will not push
-predicates through opaque Python, so we order the plan by hand.
+parse_events_pandas is the Arrow-batched twin of the same computation in
+pandas vectorized .str operations, kept as the reference the equality tests
+compare the native engine against. Catalyst will not push predicates through
+its opaque Python, so cheap native columns (host, lang, length(html)) are
+projected/filtered BEFORE it (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -121,99 +123,80 @@ def _parse_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # The same extraction, fully JVM-side: decode(html,'ISO-8859-1') maps bytes
 # 1:1 to codepoints (lossless, like the pandas latin-1 path), so Java regex
 # over that string is byte-exact, and encode(...,'ISO-8859-1') restores the
-# original bytes. Everything stays inside whole-stage codegen — measured on
-# this box the Python-worker path stops scaling past ~8 concurrent workers,
-# while this plan scales with cores. The pandas twin below is kept as the
-# Arrow-UDF reference implementation; tests assert both produce identical
-# rows.
+# original bytes. Everything stays inside whole-stage codegen — measured at
+# local[32] (BENCH/BASELINE.md) the Python-worker path stops scaling past ~8
+# concurrent workers, while this plan scales with cores.
+#
+# Body extraction is ONE regex pass: two regexp_extract calls (group 1 for
+# the matched/empty distinction, group 2 for the content) would each compile
+# into their own full scan of the page — no CSE across different group
+# indexes. regexp_extract_all over group 2 of a pattern whose OUTER group
+# includes the literal tags yields at most one element (the greedy (.*)
+# consumes through the LAST </body>, so a second match is impossible) and
+# distinguishes no-match ([]) from empty-body ([""]) for free. NULL html is
+# not ok (refparser's `if not html`), so it dead-letters like a page with no
+# body; get() returns NULL out-of-bounds under ANSI where element_at errors.
+#
+# seg layout is fixed ('§EVT|type|payload§'), so cheap substring ops replace
+# two more regex scans: type = 2nd '|' field, payload = the rest minus the
+# trailing 2-byte marker.
+#
+# The plan is built by one SQL statement on the pages' own session (so it
+# works inside foreachBatch): one call into the JVM instead of one per
+# expression node.
 
 _MARK_J = "Â§"  # 'Â§' — the latin-1 view of b'\xc2\xa7'
 _EVENT_PAT_J = f"(?s){_MARK_J}EVT\\|([a-z]+)\\|(.*?){_MARK_J}"
-_BODY_PAT_J = "(?s)<body>(.*)</body>"
+_BODY_OUTER_PAT_J = "(?s)(<body>(.*)</body>)"
 _META_PAT_J = '<meta lang="([a-z]+)"'
 
-
-# single-pass body extraction: the OUTER group includes the literal tags, so
-# outer != '' distinguishes "no <body>…</body> match" from "matched with an
-# empty body" in one regex scan (instead of a separate rlike pass)
-_BODY_OUTER_PAT_J = "(?s)(<body>(.*)</body>)"
+_PARSE_SQL = """
+WITH framed AS (
+  SELECT url, warc_ts, lang, host, s,
+         regexp_extract_all(s, :body_pat, 2) AS body_arr,
+         regexp_extract(s, :meta_pat, 1) AS meta_lang_raw
+  FROM (SELECT url, warc_ts, lang, host, decode(html, 'ISO-8859-1') AS s
+        FROM {pages})
+), segs AS (
+  SELECT url, warc_ts, lang, host, ok, body, meta_lang_raw,
+         posexplode_outer(CASE WHEN ok THEN regexp_extract_all(body, :event_pat, 0) END)
+           AS (pos, seg)
+  FROM (SELECT *, s IS NOT NULL AND size(body_arr) > 0 AS ok,
+               get(body_arr, 0) AS body
+        FROM framed)
+)
+SELECT url, warc_ts, lang, host,
+       CAST(coalesce(pos, 0) AS INT) AS seq,
+       CASE WHEN NOT ok THEN 'parse_error'
+            WHEN seg IS NULL THEN 'none'
+            ELSE element_at(split(seg, :field_sep, 3), 2) END AS event_type,
+       CASE WHEN ok AND seg IS NOT NULL
+            THEN substr(element_at(split(seg, :field_sep, 3), 3), 1,
+                        length(element_at(split(seg, :field_sep, 3), 3)) - 2) END AS payload,
+       CASE WHEN ok AND meta_lang_raw != '' THEN meta_lang_raw END AS meta_lang,
+       CASE WHEN ok AND coalesce(pos, 0) = 0
+            THEN encode(regexp_replace(body, :event_pat, ''), 'ISO-8859-1') END AS text_bytes,
+       CASE WHEN ok THEN :parse_ok ELSE :parse_error END AS parse_status,
+       CASE WHEN NOT ok THEN :no_body END AS error_msg
+FROM segs
+"""
 
 
 def parse_events_native(pages: DataFrame) -> DataFrame:
     if "host" not in pages.columns:
         pages = with_host(pages)
-    s = F.decode(F.col("html"), "ISO-8859-1")
-    # ONE regex pass extracts the body: the previous two regexp_extract
-    # calls (group 1 for the matched/empty distinction, group 2 for the
-    # content) each compiled into their own full scan of the page — no CSE
-    # across different group indexes. regexp_extract_all over group 2
-    # yields at most one element (the greedy (.*) consumes through the
-    # LAST </body>, so a second match is impossible) and distinguishes
-    # no-match ([]) from empty-body ([""]) for free; NULL html keeps the
-    # NULL ok it had (F.get, not element_at: returns NULL out-of-bounds
-    # under ANSI instead of erroring).
-    base = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "host",
-        s.alias("s"),
-    ).withColumns(
-        {
-            "body_arr": F.regexp_extract_all("s", F.lit(_BODY_OUTER_PAT_J), 2),
-            "meta_lang_raw": F.regexp_extract("s", _META_PAT_J, 1),
-        }
-    ).withColumns(
-        {
-            "ok": F.when(F.col("s").isNotNull(), F.size("body_arr") > 0),
-            "body": F.get("body_arr", 0),
-        }
-    )
-    exploded = base.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "host",
-        "ok",
-        "body",
-        "meta_lang_raw",
-        F.posexplode_outer(
-            F.when(
-                F.col("ok"),
-                F.regexp_extract_all("body", F.lit(_EVENT_PAT_J), 0),
-            )
-        ).alias("pos", "seg"),
-    )
-    is_err = ~F.col("ok")
-    no_events = F.col("ok") & F.col("seg").isNull()
-    seq = F.coalesce(F.col("pos"), F.lit(0)).cast("int")
-    text_b = F.encode(F.regexp_replace("body", _EVENT_PAT_J, ""), "ISO-8859-1")
-    # seg layout is fixed ('§EVT|type|payload§'), so cheap substring ops
-    # replace two more regex scans: type = 2nd '|' field, payload = the rest
-    # minus the trailing 2-byte marker
-    seg_parts = F.split(F.col("seg"), "\\|", 3)
-    seg_type = F.element_at(seg_parts, 2)
-    seg_tail = F.element_at(seg_parts, 3)
-    seg_payload = seg_tail.substr(F.lit(1), F.length(seg_tail) - F.lit(2))
-    return exploded.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "host",
-        seq.alias("seq"),
-        F.when(is_err, F.lit("parse_error"))
-        .when(no_events, F.lit("none"))
-        .otherwise(seg_type)
-        .alias("event_type"),
-        F.when(~is_err & ~no_events, seg_payload).alias("payload"),
-        F.when(~is_err & (F.col("meta_lang_raw") != ""), F.col("meta_lang_raw")).alias(
-            "meta_lang"
-        ),
-        F.when(~is_err & (seq == 0), text_b).alias("text_bytes"),
-        F.when(is_err, F.lit(PARSE_ERROR)).otherwise(F.lit(PARSE_OK)).alias(
-            "parse_status"
-        ),
-        F.when(is_err, F.lit(ERR_NO_BODY)).alias("error_msg"),
+    return pages.sparkSession.sql(
+        _PARSE_SQL,
+        args={
+            "body_pat": _BODY_OUTER_PAT_J,
+            "meta_pat": _META_PAT_J,
+            "event_pat": _EVENT_PAT_J,
+            "field_sep": "\\|",
+            "parse_ok": PARSE_OK,
+            "parse_error": PARSE_ERROR,
+            "no_body": ERR_NO_BODY,
+        },
+        pages=pages,
     )
 
 
@@ -232,18 +215,16 @@ def parse_events_pandas(pages: DataFrame) -> DataFrame:
     return pages.select(*cols).mapInPandas(_parse_iter, schema=EVENTS_SCHEMA)
 
 
-def parse_events(pages: DataFrame, engine: str | None = None) -> DataFrame:
+def parse_events(pages: DataFrame, engine: str = "native") -> DataFrame:
     """pages(url, warc_ts, html, lang[, host]) → typed event rows.
 
     One output row per embedded event record; pages that fail to frame
-    yield exactly one parse_error row routed to the error sink downstream.
+    (no <body>…</body>, empty or NULL html) yield exactly one parse_error
+    row routed to the error sink downstream.
 
     engine: 'native' (default — JVM regex, whole-stage codegen) or 'pandas'
-    (Arrow-batched UDF). Overridable via $SPARK_GRAFT_PARSE_ENGINE.
+    (the Arrow-batched UDF twin the equality tests compare against).
     """
-    import os
-
-    engine = engine or os.environ.get("SPARK_GRAFT_PARSE_ENGINE", "native")
     if engine == "pandas":
         return parse_events_pandas(pages)
     return parse_events_native(pages)

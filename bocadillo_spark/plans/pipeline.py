@@ -1,9 +1,10 @@
 """Batch pipeline assembly: pages → parse → route → aggregate.
 
 One Catalyst plan end-to-end (the §3.3 EnhancedReader loop re-expressed
-declaratively): native projections/filters first, the single pandas-UDF
-parse in the middle, broadcast join + hash aggregate after. See
-/root/reference/reader/enhanced_reader.go:80-127 for the scalar original.
+declaratively): the host projection first, the native regex parse in the
+middle, broadcast join against the range-built dim + hash aggregate after.
+See the reference's reader/enhanced_reader.go:80-127 for the scalar
+original.
 """
 
 from __future__ import annotations

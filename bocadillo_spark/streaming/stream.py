@@ -36,8 +36,9 @@ def start_pipeline_stream(
     pages = stream_pages(spark, pages_path, max_files_per_trigger)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        # dim reload per batch = schema-refresh analog
-        # (/root/reference/reader/schema/manager.go:34-42)
+        # dim reload per batch = the reference's schema-refresh analog
+        # (reader/schema/manager.go:34-42); the reload is a JVM-only range
+        # scan and starts no Python worker
         dim = build_routing_dim(batch_df.sparkSession)
         routed = route(parse_events(with_host(batch_df)), dim)
         write_fanout(routed, out_dir, batch_id=batch_id)

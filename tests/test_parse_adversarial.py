@@ -114,30 +114,23 @@ def test_spark_engines_agree_with_refparser_on_adversarial(spark):
 
 
 def test_parse_null_html_dead_letter(spark):
-    """REVIEW_r06 fourth pass #1: a NULL html cell must yield a
-    parse_error dead-letter row in BOTH engines (refparser: `if not html`;
-    pandas engine: NaN body). parse_events_native's `ok = body_outer != ''`
-    is NULL for NULL input, so every F.when falls through to the 'ok'
-    branch and the row routes to a real sink — breaking the never-throw/
-    dead-letter invariant and engine agreement. Fix staged for the r07
-    window (parse.py backs r05-green out-of-window queries:
-    route_counts_streaming, sink_reconciliation, cdc_latest_state,
-    url_dedup_canonical, the multimodal trio)."""
-    import pytest as _pytest
-
+    """REVIEW_r06 fourth pass #1: a NULL html cell must yield one
+    parse_error/no_body dead-letter row in BOTH engines (refparser:
+    `if not html`; pandas engine: NaN body), never an 'ok' row routed to a
+    real sink."""
     rows = [("https://h000.example.com/n/0", dt.datetime(2024, 1, 1), None, None, "en")]
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     ).withColumn("host", __import__("pyspark").sql.functions.lit("h000"))
-    nat = parse_events_native(pages).collect()
-    pan = parse_events_pandas(pages).collect()
-    assert [(r["event_type"], r["parse_status"]) for r in pan] == [
-        ("parse_error", "error")
-    ]
-    if [(r["event_type"], r["parse_status"]) for r in nat] != [
-        ("parse_error", "error")
-    ]:
-        _pytest.xfail("REVIEW_r06 #1: native engine labels NULL html 'ok' — r07 fix")
+    want = [(0, "parse_error", None, None, rp.PARSE_ERROR, rp.ERR_NO_BODY)]
+    for parsed in (parse_events_native(pages), parse_events_pandas(pages)):
+        got = [
+            (r["seq"], r["event_type"], r["payload"], r["text_bytes"],
+             r["parse_status"], r["error_msg"])
+            for r in parsed.collect()
+        ]
+        assert got == want
+    assert rp.parse_page(None).parse_status == rp.PARSE_ERROR
 
 
 def test_sink_counts_match_refparser_with_zero_event_pages(spark):

@@ -5,6 +5,7 @@ for the counts plan."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bocadillo_spark.operators.aggregate import sink_counts
@@ -47,6 +48,74 @@ def test_counts_plan_shape(spark, sf_dir, tmp_path):
         and "Reused" not in l
     ]
     assert len(shuffles) <= 2, shuffles  # tree line + detail section
+
+
+@pytest.fixture(scope="module")
+def pages_parquet(spark, sf_dir, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plans") / "pages")
+    synth_pages(spark, sf_dir).write.parquet(path)
+    return path
+
+
+def _subtree(plan: str, line_no: int) -> list[str]:
+    """Lines of the tree-format plan node at line_no and its descendants."""
+    lines = plan.splitlines()
+    depth = len(lines[line_no]) - len(lines[line_no].lstrip(" :+-"))
+    out = [lines[line_no]]
+    for line in lines[line_no + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        out.append(line)
+    return out
+
+
+def test_routed_events_plan_is_jvm_only(spark, pages_parquet):
+    """The flagship parse → route plan runs without Python workers or
+    Python-built rows: the routing dim is a single-partition Range scan
+    broadcast into the hash join, and binding the frames into SQL leaves
+    no temp view behind."""
+    from bocadillo_spark.plans.pipeline import routed_events
+
+    views_before = {t.name for t in spark.catalog.listTables()}
+    df = routed_events(spark, spark.read.parquet(pages_parquet))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for bad in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert bad not in plan, bad
+    lines = plan.splitlines()
+    bhj = [i for i, l in enumerate(lines) if "BroadcastHashJoin" in l]
+    assert len(bhj) == 1, plan
+    build = [
+        i for i in range(bhj[0] + 1, len(lines))
+        if lines[i].lstrip(" :+-").startswith("BroadcastExchange")
+    ]
+    assert build, plan
+    dim_side = _subtree(plan, build[0])
+    assert any(l.lstrip(" :+-").startswith("Range (") for l in dim_side), dim_side
+    assert not any("Scan" in l for l in dim_side), dim_side
+    df.write.format("noop").mode("overwrite").save()
+    assert {t.name for t in spark.catalog.listTables()} == views_before
+
+
+def test_pipeline_plan_gateway_budget(spark, pages_parquet, monkeypatch):
+    """Building the counts plan is a few dozen Python→JVM round trips, not
+    one per expression node (about 1,400 when every operator was chained
+    DataFrame-API calls). The bound keeps per-node plan building from
+    creeping back."""
+    from bocadillo_spark.plans.pipeline import pipeline_counts
+
+    pages = spark.read.parquet(pages_parquet)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args[0])
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    pipeline_counts(spark, pages)
+    monkeypatch.undo()
+    assert len(calls) <= 200, len(calls)
 
 
 def test_q3_plan_pushdown_and_broadcast(spark, sf_dir):
