@@ -17,6 +17,7 @@ loop (cmd/main.go:41-73); the fan-out + manifest pattern generalizes it.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import math
 import os
@@ -60,6 +61,9 @@ def write_training_shards(
 def read_shard_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-shard stats FROM THE WRITTEN ARTIFACT (not the plan that made
     it) — what the export grading and a pre-training sanity check read."""
+    if not glob.glob(os.path.join(glob.escape(out_dir), "shard=*")):
+        # a zero-row export writes no shard=* directory
+        return spark.createDataFrame([], "shard long, n_docs long, shard_tokens long")
     df = spark.read.schema(
         "doc_id bigint, lang string, text string, n_tokens bigint"
     ).option("basePath", out_dir).json(f"{out_dir}/shard=*")

@@ -1,15 +1,19 @@
-"""Fan-out sinks + per-partition lineage manifests.
+"""Fan-out sinks + per-file lineage manifests.
 
-Routing fan-out (S6 analog, /root/reference/cmd/main.go:41-73) lands each
+Routing fan-out (S6 analog, reference cmd/main.go:41-73) lands each
 event in its sink's directory via ONE partitioned write — not one job per
-sink — so the 100 TB case stays a single pass. Idempotency under replay
-(safepoint analog T2, /root/reference/reader/enhanced_reader.go:129-136):
-each micro-batch writes to its own batch_id=N subtree with overwrite, so a
-re-run of a batch after crash replaces rather than duplicates.
+sink — so the 100 TB case stays a single pass. One AQE rebalance on the
+output directory (sink_id, event_type) feeds the write: files per batch
+are bounded by data size (a small micro-batch writes one file per
+directory), and a hot directory is split at runtime, not by a fixed salt.
+Idempotency under replay (safepoint analog T2, reference
+reader/enhanced_reader.go:129-136): each micro-batch writes to its own
+batch_id=N subtree with overwrite, so a re-run of a batch after crash
+replaces rather than duplicates.
 
 Manifests are the lineage record the north_rule asks for: one row per
-output partition with (partition_id, first_url, last_url, count), plus
-per-sink counts for reconciliation, written as JSON next to the data.
+written file with (file, sink, first_url, last_url, n), plus per-sink
+counts for reconciliation, written as JSON next to the data.
 """
 
 from __future__ import annotations
@@ -20,15 +24,11 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FANOUT_PARTITIONS = 32  # files per batch bounded; hot sinks split by salt
 
-
-def _spread(routed: DataFrame, n: int = FANOUT_PARTITIONS) -> DataFrame:
-    # sink_id alone would put 60%+ of rows in two tasks (Zipf hosts);
-    # salt splits hot sinks while keeping sink files clustered.
-    return routed.repartition(
-        n, F.col("sink_id"), F.pmod(F.hash(F.col("url")), F.lit(8))
-    )
+def _spread(routed: DataFrame) -> DataFrame:
+    # AQE coalesces the batch to one writer per small directory and splits
+    # a directory that outgrows the advisory partition size (Zipf hosts)
+    return routed.hint("rebalance", "sink_id", "event_type")
 
 
 def _footer_lineage(data_dir: str) -> list[dict] | None:
@@ -140,9 +140,17 @@ def write_fanout(routed: DataFrame, out_dir: str, batch_id: int = 0) -> dict:
 
 
 def read_sink_counts(spark, out_dir: str) -> DataFrame:
-    """Reconciliation read-back over every committed batch."""
+    """Reconciliation read-back over the batches whose manifest committed;
+    data a crash left without a manifest is not counted."""
     data = os.path.join(out_dir, "data")
-    df = spark.read.option("basePath", data).parquet(data)
+    paths = [
+        os.path.join(data, f"batch_id={m['batch_id']}")
+        for m in read_manifests(out_dir)
+        if m["total"]
+    ]
+    if not paths:
+        return spark.createDataFrame([], "sink_id string, event_type string, n long")
+    df = spark.read.option("basePath", data).parquet(*paths)
     return df.groupBy("sink_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
 
 

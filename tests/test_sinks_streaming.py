@@ -6,6 +6,8 @@ run, restart from checkpoint, end state identical — no loss, no dup."""
 
 from __future__ import annotations
 
+import os
+import re
 import tempfile
 
 from pyspark.sql import functions as F
@@ -130,6 +132,55 @@ def test_fanout_replay_is_idempotent(spark, sf_dir):
         assert got1 == got2 == _expected_counts(spark, sf_dir)
         assert m1["sink_counts"] == m2["sink_counts"]
         assert len(read_manifests(out)) == 1  # manifest overwritten, not duplicated
+
+
+def test_fanout_writes_one_file_per_directory(spark, sf_dir):
+    """A small batch coalesces to one file per (sink_id, event_type)
+    directory: the write is fed by an AQE rebalance on the output
+    directory, not by a fixed partition count."""
+    from bocadillo_spark.plans.sinks import _spread
+
+    routed = route(
+        parse_events(with_host(synth_pages(spark, sf_dir))), build_routing_dim(spark)
+    )
+    plan = _spread(routed)._jdf.queryExecution().executedPlan().toString()
+    assert re.search(
+        r"Exchange hashpartitioning\(sink_id#\d+, event_type#\d+, \d+\), "
+        r"REBALANCE_PARTITIONS_BY_COL",
+        plan,
+    ), plan
+    assert "REPARTITION_BY_NUM" not in plan
+    with tempfile.TemporaryDirectory() as out:
+        manifest = write_fanout(routed, out, batch_id=0)
+        assert len(manifest["files"]) == len(manifest["sink_counts"])
+
+
+def test_fanout_splits_large_directory_at_runtime(spark, sf_dir):
+    """Past the advisory partition size AQE splits a directory's rows over
+    several writers (the job the old fixed salt did), and the manifest
+    still reconciles with the data read back."""
+    from bocadillo_spark.synth import synth_pages_scaled
+
+    routed = route(
+        parse_events(with_host(synth_pages_scaled(spark, sf_dir, 8, 8))),
+        build_routing_dim(spark),
+    )
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "256KB")
+    try:
+        with tempfile.TemporaryDirectory() as out:
+            manifest = write_fanout(routed, out, batch_id=0)
+            got = _counts_dict(read_sink_counts(spark, out))
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert len(manifest["files"]) > len(manifest["sink_counts"])
+    assert {f"{s}/{e}": n for (s, e), n in got.items()} == manifest["sink_counts"]
+    assert manifest["total"] == sum(got.values())
+    assert got == _counts_dict(sink_counts(routed))
 
 
 def test_processing_time_trigger_liveness(spark, sf_dir):
@@ -263,25 +314,10 @@ def test_dedup_stream_state_survives_restart(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-6 third-review findings, pinned as xfail until the round-7 fix
-# window (REVIEW_r06.md batch 3: sink_reconciliation and
-# export_training_shards are r05-green and outside the full round-6
-# grading window). Each test asserts the CORRECT behavior.
+# Round-6 third-review findings (REVIEW_r06.md batch 3, #3 and #4).
 # ---------------------------------------------------------------------------
 
-import os
 
-import pytest
-
-
-@pytest.mark.xfail(
-    reason="REVIEW_r06 3rd batch #4: read_sink_counts scans the whole "
-    "data/ tree, counting batches whose parquet landed but whose manifest "
-    "commit never happened — disagrees with read_manifests after a crash "
-    "between write and commit. Fix: filter batch_id to committed "
-    "manifests. Round-7.",
-    strict=False,
-)
 def test_read_sink_counts_ignores_uncommitted_batches(spark, sf_dir):
     routed = route(
         parse_events(with_host(synth_pages(spark, sf_dir))), build_routing_dim(spark)
@@ -300,15 +336,11 @@ def test_read_sink_counts_ignores_uncommitted_batches(spark, sf_dir):
             f"uncommitted batch counted: readback={got_total} "
             f"committed={committed_total}"
         )
+        # no committed batch at all: an empty frame, not the landed data
+        os.remove(f"{out}/_manifests/batch_0.json")
+        assert read_sink_counts(spark, out).count() == 0
 
 
-@pytest.mark.xfail(
-    reason="REVIEW_r06 3rd batch #3: read_shard_stats crashes with "
-    "PATH_NOT_FOUND on an empty export (partitionBy write of zero rows "
-    "produces no shard=* dirs) instead of returning an empty stats "
-    "frame. Fix: glob-guard. Round-7.",
-    strict=False,
-)
 def test_read_shard_stats_empty_export(spark):
     from bocadillo_spark.plans.export import read_shard_stats, write_training_shards
 
