@@ -9,13 +9,16 @@
   pre-bucketed (written partitioned by bucket) so a probe prunes
   partitions; here the bucket column is computed on the fly.
 
-All float scoring stages are Arrow-batched BLAS passes (pair_cos_pandas /
-pair_dot_pandas / lsh_band_keys_pandas): Spark runs higher-order array
-folds (aggregate/zip_with) in the expression interpreter, outside
+All float scoring stages over the corpus are Arrow-batched BLAS passes
+(brute_force_topk's scan, ivf_assign, pair_cos_pandas,
+lsh_band_keys_pandas, the bucket-scan verify): Spark runs higher-order
+array folds (aggregate/zip_with) in the expression interpreter, outside
 whole-stage codegen, which measured ~4.5 ms/vector — the dominant cost of
 every scoring plan here before round 5 vectorized them. The interpreted
-expression twins (cosine_col/_dot/_sq_dist, lsh_band_keys_col) remain for
-equality tests and tiny driver-side frames.
+folds left (_dot, _sq_dist, _plane_dot) score the small query/centroid
+sides and lsh_bucket_col's few planes. Each operator has one
+implementation; the tests grade it against the registry's DuckDB
+oracle_sql() texts and numpy.
 """
 
 from __future__ import annotations
@@ -36,36 +39,20 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_col(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def brute_force_topk(
-    queries: DataFrame, candidates: DataFrame, k: int = 10, vectorized: bool = True
+    queries: DataFrame, candidates: DataFrame, k: int = 10
 ) -> DataFrame:
     """queries(q_id, qe), candidates(neighbor_id, ce) → top-k by cosine.
 
-    Default plan: the query set (small by contract — the old plan already
-    broadcast it) is collected into one matrix; a mapInPandas scan over
-    the candidates computes one batch×n_q BLAS matmul per Arrow batch and
-    keeps a per-PARTITION top-k per query (tiebreak cos desc,
-    neighbor_id asc — same as the final window), so the shuffle carries
-    only n_parts × n_q × k tiny rows into the exact global top-k window.
-    The crossJoin twin (`vectorized=False`, equality-tested) duplicated
-    every candidate VECTOR n_q times and scored each copy with an
-    interpreted aggregate(zip_with) fold — the same expression-
-    interpreter bottleneck measured at ~4.5 ms/vector in the band
-    projection this module already vectorized."""
-    if not vectorized:
-        scored = candidates.crossJoin(F.broadcast(queries)).withColumn(
-            "cos", cosine_col(F.col("qe"), F.col("ce"))
-        )
-        w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("q_id", "neighbor_id", "cos")
-        )
+    The query set (small by contract) is collected into one matrix; a
+    mapInPandas scan over the candidates computes one batch×n_q BLAS
+    matmul per Arrow batch and keeps a per-PARTITION top-k per query
+    (tiebreak cos desc, neighbor_id asc — same as the final window), so
+    the shuffle carries only n_parts × n_q × k tiny rows into the exact
+    global top-k window. A crossJoin plan would duplicate every candidate
+    VECTOR n_q times and score each copy with an interpreted
+    aggregate(zip_with) fold (~4.5 ms/vector). Graded by the
+    ann_cosine_topk registry entry against its DuckDB oracle."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     qrows = queries.select("q_id", "qe").collect()  # small by contract
@@ -153,36 +140,17 @@ def lsh_bucket_col(e, planes: np.ndarray):
     return bucket.cast("int")
 
 
-def lsh_band_keys_col(e, planes: np.ndarray, bits_per_band: int = 4):
-    """Banded sign-LSH keys: planes split into bands of `bits_per_band`;
-    equal key in ANY band → candidate. Per-plane collision probability at
-    cosine θ is 1 - arccos(θ)/π (Charikar 2002, STOC §3) — p ≈ 0.955 at
-    the 0.99 near-dup threshold — so a true pair misses every band w.p.
-    (1 - p^bits)^n_bands while an uncorrelated pair collides in one band
-    w.p. ~2^-bits: widening the bands prunes the candidate space
-    geometrically at a tiny (and quantified) recall cost. Band id is
-    packed above bit 32, so any bits_per_band ≤ 32 yields disjoint key
-    spaces per band."""
-    n_bands = len(planes) // bits_per_band
-    keys = []
-    for b in range(n_bands):
-        key = F.lit(b << 32).cast("long")
-        for j in range(bits_per_band):
-            key = key + F.when(
-                _plane_dot(e, planes[b * bits_per_band + j]) > 0,
-                F.lit(1 << j).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        keys.append(key)
-    return F.array(*keys)
-
-
 def lsh_band_keys_pandas(planes: np.ndarray, bits_per_band: int):
     """Vectorized sign-LSH band keys: ONE BLAS matmul per Arrow batch
-    (batch×dim @ dim×planes), signs packed into per-band integer keys —
-    semantically the same keys as lsh_band_keys_col (band id above bit
-    32, bit j of band b = sign of plane[b·bits+j]·v; float summation
-    order may differ only for dots at exactly 0, measure-zero for real
-    embeddings). Why a Pandas UDF here when the rest of the engine is
+    (batch×dim @ dim×planes), signs packed into per-band integer keys:
+    band id above bit 32 (any bits_per_band ≤ 32 yields disjoint key
+    spaces per band), bit j of band b = sign of plane[b·bits+j]·v.
+    Per-plane collision probability at cosine θ is 1 - arccos(θ)/π
+    (Charikar 2002, STOC §3) — p ≈ 0.955 at the 0.99 near-dup threshold —
+    so a true pair misses every band w.p. (1 - p^bits)^n_bands while an
+    uncorrelated pair collides in one band w.p. ~2^-bits.
+
+    Why a Pandas UDF here when the rest of the engine is
     expression-native: Spark evaluates higher-order array functions
     (aggregate/zip_with) in the expression interpreter, outside
     whole-stage codegen — at 128 planes × 64 dims that measured ~4.5
@@ -210,36 +178,11 @@ def lsh_band_keys_pandas(planes: np.ndarray, bits_per_band: int):
     return band_keys
 
 
-def pair_dot_pandas():
-    """Arrow-batched elementwise-pair dot (einsum 'ij,ij->i'): one BLAS
-    pass per batch instead of one interpreted aggregate(zip_with) fold per
-    ROW. The near-dup verify stage evaluates a dot per CANDIDATE PAIR —
-    millions of rows at any real corpus — and the interpreted fold there
-    measured ~57 s of a 66 s local[1] run (13.2k vectors, 6.1M
-    candidates); the batched version is ~100× that throughput, map-side,
-    no shuffle. Summation order differs from the sequential fold by
-    float-rounding only (graded outputs round to 6 decimals; the DuckDB
-    oracle computes with its own order already)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.vstack(a.to_numpy())
-        B = np.vstack(b.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    return pair_dot
-
-
 def pair_cos_pandas():
     """Arrow-batched per-row cosine (einsum dots + norms, one BLAS pass
-    per batch) — the vectorized replacement for `cosine_col` in every
-    candidate-scoring stage (lsh_topk / ivf_topk / ivf_topk_indexed),
-    where one interpreted fold per candidate row was the dominant cost;
-    same rationale as pair_dot_pandas."""
+    per batch) for every candidate-scoring stage (lsh_topk / ivf_topk /
+    ivf_topk_indexed), where one interpreted aggregate(zip_with) fold per
+    candidate row was the dominant cost."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
@@ -329,35 +272,6 @@ def embedding_oversized_buckets(
         bands.groupBy("bk")
         .agg(F.count(F.lit(1)).alias("bn"))
         .where(F.col("bn") > max_bucket)
-    )
-
-
-def embedding_candidate_pairs(
-    vecs: DataFrame,
-    bits_per_band: int | None = None,
-    corpus_count: int | None = None,
-    max_bucket: int = EMB_MAX_BUCKET,
-) -> DataFrame:
-    """Distinct candidate id pairs from the capped band join — the
-    prefilter stage of embedding_near_dup_pairs, exposed so the bench can
-    evidence that candidate volume stays LINEAR in corpus size under the
-    auto-sized band width (the round-4 verdict's 100x concern)."""
-    from .dedup import persist_evicting
-
-    banded = persist_evicting(
-        embedding_bands(vecs, bits_per_band=bits_per_band, corpus_count=corpus_count)
-    )
-    sizes = banded.groupBy("bk").agg(F.count(F.lit(1)).alias("bn"))
-    ok_keys = sizes.where(F.col("bn") <= max_bucket).select("bk")
-    pruned = banded.join(ok_keys, "bk")
-    a, b = pruned.alias("a"), pruned.alias("b")
-    return (
-        a.join(b, "bk")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_id_a"), F.col("b.vec_id").alias("vec_id_b")
-        )
-        .distinct()
     )
 
 
@@ -466,14 +380,13 @@ def embedding_near_dup_pairs(
     partitioned on the band key), sort within partitions, then a
     streaming mapInPandas scan verifies each bucket with one k×k numpy
     matmul and emits only pairs at cos ≥ threshold; a final groupBy+max
-    collapses pairs found in several bands. The earlier join-based twin
-    (embedding_near_dup_pairs_joined, kept + equality-tested) instead
-    materialized every candidate PAIR and re-joined both vectors onto
-    it: ~50 candidates/vector × 1 KB through two sort-merge joins, a
+    collapses pairs found in several bands. A join-based plan instead
+    materializes every candidate PAIR and re-joins both vectors onto it:
+    ~50 candidates/vector × 1 KB through two sort-merge joins, a
     multi-million-row distinct, and an Arrow round-trip — ~6× the
-    shuffle bytes; measured 113 s vs this plan at local[1] on 211k
-    vectors. Exactness is identical (same candidate set, same float64
-    dots); recall is quantified in sized_bits_per_band."""
+    shuffle bytes; it measured 113 s vs this plan at local[1] on 211k
+    vectors. Graded by dedup_embedding against its all-pairs DuckDB
+    oracle; recall is quantified in sized_bits_per_band."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     if bits_per_band is None:
@@ -507,76 +420,25 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_pairs_joined(
-    vecs: DataFrame,
-    threshold: float = 0.99,
-    bits_per_band: int | None = None,
-    corpus_count: int | None = None,
-    max_bucket: int = EMB_MAX_BUCKET,
-) -> DataFrame:
-    """Join-based twin of embedding_near_dup_pairs (candidate pair table
-    → re-join vectors → Arrow-batched dot): kept as the reference
-    implementation the bucket-scan plan is equality-tested against, and
-    as the shape to reach for if per-band vector duplication (16× the
-    embedding column through one shuffle) ever costs more than pair
-    materialization (candidates/vector × 1 KB through two joins) — at
-    the auto-sized ~50 candidates/vector it does not."""
-    cand = embedding_candidate_pairs(
-        vecs,
-        bits_per_band=bits_per_band,
-        corpus_count=corpus_count,
-        max_bucket=max_bucket,
-    )
-    # norms once per VECTOR (not once per candidate pair — 3x fewer dots)
-    normed = vecs.select(
-        "vec_id", "e", F.sqrt(_dot(F.col("e"), F.col("e"))).alias("nrm")
-    )
-    va = normed.select(
-        F.col("vec_id").alias("vec_id_a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
-    )
-    vb = normed.select(
-        F.col("vec_id").alias("vec_id_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
-    )
-    scored = cand.join(va, "vec_id_a").join(vb, "vec_id_b").withColumn(
-        "cos", pair_dot_pandas()(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    )
-    return scored.where(F.col("cos") >= threshold).select(
-        "vec_id_a", "vec_id_b", "cos"
-    )
-
-
 def _sq_dist(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
-def ivf_assign(
-    emb: DataFrame, centroids: DataFrame, vectorized: bool = True
-) -> DataFrame:
+def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Coarse quantization: nearest centroid per vector. At scale the
     candidate table is written partitioned by `list_id`, so probes prune
     whole partitions (the IVF inverted-list layout).
 
-    Default plan: the centroid set (n_lists rows — driver-bounded by
-    construction, the same bound ivf_topk_indexed's probe collect relies
-    on) becomes one matrix; a pandas_udf computes each Arrow batch's
-    nearest centroid with a single batch×n_lists matmul
-    (argmin ‖x−c‖² = argmin ‖c‖²−2x·c; ties → lowest centroid_id,
-    DETERMINISTIC where the min_by twin is tie-arbitrary). The
-    `vectorized=False` twin crossJoins every vector against every
-    centroid and scores each pair with an interpreted aggregate fold —
-    n_lists× the rows, each paying the expression-interpreter tax; the
-    assignment pass runs over the FULL corpus, making it the most
-    scale-critical stage of the IVF build."""
-    if not vectorized:
-        d = emb.crossJoin(F.broadcast(centroids)).withColumn(
-            "dist", _sq_dist(F.col("e"), F.col("ce"))
-        )
-        return d.groupBy("vec_id").agg(
-            F.min_by("centroid_id", "dist").alias("list_id"),
-            F.first("e").alias("e"),
-        )
+    The centroid set (n_lists rows — driver-bounded by construction, the
+    same bound ivf_topk_indexed's probe collect relies on) becomes one
+    matrix; a pandas_udf computes each Arrow batch's nearest centroid
+    with a single batch×n_lists matmul (argmin ‖x−c‖² = argmin
+    ‖c‖²−2x·c; ties → lowest centroid_id, DETERMINISTIC). The assignment
+    pass runs over the FULL corpus, making it the most scale-critical
+    stage of the IVF build: a crossJoin against every centroid would pay
+    n_lists× the rows, each through an interpreted aggregate fold."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 

@@ -416,55 +416,3 @@ def fingerprint_oracle_sql(table: str = "documents") -> str:
   (acc, v) -> (acc * {H.FP_BASE} + v) % {H.MERSENNE31}) AS BIGINT) AS fingerprint
 FROM {table}"""
 
-
-def repetition_scores_arrayop(docs: DataFrame) -> DataFrame:
-    """SHUFFLE-FREE twin of repetition_scores: the same three columns
-    computed per-row with array expressions — top-bigram mass as the max
-    run length of the SORTED bigram array (one O(n log n) sort + one
-    linear fold per doc), duplicate-trigram mass as n - n_distinct.
-    Asserted row-identical to the explode→agg plan in tests/test_plans.py.
-
-    Trade-off — MEASURED, and why the explode→agg form stays the graded
-    default: at sf0.1 (5k docs, local[8]) this variant is ~2.7x SLOWER
-    (28.8 s vs 10.5 s, stable across repeats) — higher-order array
-    functions run interpreted (no codegen, the round-2 lesson) and that
-    interpreter cost beats the shuffle it avoids even at modest scale.
-    It also needs the whole gram array per row, and a single pathological
-    100M-token doc becomes one task; the exploded form spreads even one
-    giant doc across the cluster. Kept as the plan-equivalence witness."""
-    ws = _words_col()
-    b2 = _word_ngrams(ws, 2)
-    b3 = _word_ngrams(ws, 3)
-    s2 = F.array_sort(b2)
-    run = F.aggregate(
-        s2,
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).alias("cur"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.cur + 1).otherwise(F.lit(1)).alias("cur"),
-            F.greatest(
-                acc.best,
-                F.when(x == acc.prev, acc.cur + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    top = F.when(
-        F.size(b2) > 0, run.cast("double") / F.size(b2)
-    ).otherwise(F.lit(0.0))
-    dup = F.when(
-        F.size(b3) > 0,
-        (F.size(b3) - F.size(F.array_distinct(b3))).cast("double") / F.size(b3),
-    ).otherwise(F.lit(0.0))
-    return docs.select(
-        "doc_id",
-        top.alias("top_bigram_frac"),
-        dup.alias("dup_trigram_frac"),
-        (
-            (top > F.lit(REP_TOP_BIGRAM_MAX)) | (dup > F.lit(REP_DUP_TRIGRAM_MAX))
-        ).alias("flagged"),
-    )

@@ -2954,47 +2954,14 @@ def q_grouped_zscore(spark, sf_dir):
 )
 def q_ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k over array<float> embeddings — the exact
-    baseline for ANN. This graded entry is the fully-interpreted shape:
-    crossJoin against the broadcast 5-row query side, a native zip_with
-    dot-product fold, and one global per-q_id window (fine here — only
-    n_q=5 window partitions). The scale path is
-    operators/similarity.brute_force_topk (Arrow matmul + per-partition
-    partial top-k), which _ann_recall_frame uses as the recall baseline;
-    the r06 review flagged this duplication — unifying on the operator is
-    staged for the r07 window (regrade owed then anyway)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    c = emb.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")
-    )
+    baseline for ANN: operators/similarity.brute_force_topk (Arrow matmul
+    + per-partition partial top-k) over the first 5 vectors as queries,
+    the same operator _ann_recall_frame uses as the recall baseline."""
+    from .operators.similarity import brute_force_topk, split_query_candidates
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    # norms hoisted to their own sides BEFORE the cross join: the inline
-    # form re-ran the interpreted self-dot folds once per (query,
-    # candidate) PAIR (3 folds/pair); staging evaluates each norm once
-    # per row and leaves one fold per pair. Float-identical: same
-    # operations in the same order, sqrt(dot(x,x)) just computed earlier.
-    q = q.select("q_id", "qe", F.sqrt(dot(F.col("qe"), F.col("qe"))).alias("qn"))
-    c = c.select(
-        "neighbor_id", "ce", F.sqrt(dot(F.col("ce"), F.col("ce"))).alias("cn")
-    )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cos",
-        dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")),
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "neighbor_id", F.round("cos", 4).alias("cos_sim"))
+    emb = _t(spark, sf_dir, "embeddings")
+    return brute_force_topk(*split_query_candidates(emb, 5), k=10).select(
+        "q_id", "neighbor_id", F.round("cos", 4).alias("cos_sim")
     )
 
 

@@ -71,7 +71,7 @@ from pyspark.sql.types import (
 from ..operators.dedup import (
     N_BANDS,
     N_PERM,
-    ROWS_PER_BAND,
+    minhash_band_keys,
     minhash_sig_fast_pandas,
 )
 
@@ -183,22 +183,15 @@ def make_neardup_op(
 def sig_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, sig, band_key) — one row per (doc, band), batch or stream.
     Identical hash family to the batch operator: the fused signature
-    kernel plus xxhash64(band_index, signature slice) band keys
-    (operators/dedup.py minhash_bands), so a doc lands in the same
+    kernel plus dedup.minhash_band_keys, so a doc lands in the same
     buckets whichever path processes it."""
     sigs = docs.select(
         "doc_id",
         minhash_sig_fast_pandas()(F.coalesce(F.col("text"), F.lit(""))).alias("sig"),
     )
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), F.slice(F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-            )
-            for b in range(N_BANDS)
-        ]
+    return sigs.select(
+        "doc_id", "sig", F.explode(minhash_band_keys(F.col("sig"))).alias("band_key")
     )
-    return sigs.select("doc_id", "sig", F.explode(band_arr).alias("band_key"))
 
 
 def neardup_match_stream(

@@ -106,63 +106,3 @@ def user_activity_stream(events_stream: DataFrame, ttl_ms: int | None = None) ->
         )
     )
 
-
-def user_activity_stream_tws(
-    events_stream: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """The Spark-4 successor path: the SAME per-user tracker expressed as a
-    transformWithStateInPandas StatefulProcessor. State eviction is
-    declarative here — getValueState(ttlDurationMs=...) ages the value out
-    without the handleExpiredTimer/self-rescheduling dance
-    applyInPandasWithState needs — and the RocksDB-backed state store
-    supports multiple named states per key. Output rows are identical to
-    user_activity_stream's (pytest pins both paths to the batch
-    aggregate); the old path stays the default because TWS's Python state
-    server requires the `protobuf` package, absent from this container
-    (verified: the driver worker crashes importing google.protobuf — the
-    test skips with that reason where it can't run; on a protobuf-equipped
-    cluster it runs as written)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTracker(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            prev = self._agg.get() if self._agg.exists() else None
-            total_events, total_cents = prev if prev is not None else (0, 0)
-            batch_events = 0
-            for pdf in rows:
-                batch_events += len(pdf)
-                # exact accumulation: cents-integer arithmetic, no float drift
-                total_cents += int(pdf["value"].mul(100).round().sum())
-            total_events += batch_events
-            self._agg.update((total_events, total_cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "batch_events": [batch_events],
-                    "total_events": [total_events],
-                    "total_value": [round(total_cents / 100.0, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            UserTracker(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-    )

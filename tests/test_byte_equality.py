@@ -8,43 +8,53 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import pytest
-
 from bocadillo_spark import refparser as rp
 from bocadillo_spark import synth
-from bocadillo_spark.operators.parse import (
-    parse_events,
-    parse_events_native,
-    parse_events_pandas,
-    with_attrs,
-    with_host,
-)
+from bocadillo_spark.operators.parse import parse_events, with_attrs, with_host
 from bocadillo_spark.operators.route import build_routing_dim, route
 from bocadillo_spark.synth import synth_pages
 
 
-def _collect_parsed(spark, sf_dir, engine="native"):
+def _collect_parsed(spark, sf_dir):
     pages = synth_pages(spark, sf_dir)
-    return pages, parse_events(with_host(pages), engine=engine)
+    return pages, parse_events(with_host(pages))
 
 
-def test_native_equals_pandas_rowset(spark, sf_dir):
-    """The JVM-native parse and the Arrow/pandas parse are interchangeable:
-    identical row multisets, bytes included."""
-    pages = with_host(synth_pages(spark, sf_dir))
+def test_parse_rows_equal_refparser(spark, sf_dir):
+    """Every output row of parse_events equals the row the scalar
+    refparser implies for its page — all eight per-event columns (url,
+    seq, event_type, payload, meta_lang, text_bytes, parse_status,
+    error_msg), compared as multisets: a parse_error page is one
+    dead-letter row, an ok page without events is one 'none' row, and an
+    ok page with events is one row per event, text_bytes on seq 0 only."""
+    pages, parsed = _collect_parsed(spark, sf_dir)
+    cols = ["url", "seq", "event_type", "payload", "meta_lang",
+            "text_bytes", "parse_status", "error_msg"]
+    got = sorted(
+        tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in r)
+        for r in parsed.select(*cols).collect()
+    )
+    want = []
+    for r in pages.select("url", "html").collect():
+        ref = rp.parse_page(r["html"])
+        if ref.parse_status == rp.PARSE_ERROR:
+            want.append((r["url"], 0, "parse_error", None, None, None,
+                         rp.PARSE_ERROR, rp.ERR_NO_BODY))
+        elif not ref.events:
+            want.append((r["url"], 0, "none", None, ref.meta_lang,
+                         ref.text_bytes, rp.PARSE_OK, None))
+        else:
+            want.extend(
+                (r["url"], seq, t, pl, ref.meta_lang,
+                 ref.text_bytes if seq == 0 else None, rp.PARSE_OK, None)
+                for seq, t, pl in ref.events
+            )
+    assert got == sorted(want)
+    assert len(got) > 1000  # sf0.001: 500 pages fan out to ~1.5k rows
 
-    def norm(df):
-        return sorted(
-            tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in r)
-            for r in df.collect()
-        )
 
-    assert norm(parse_events_native(pages)) == norm(parse_events_pandas(pages))
-
-
-@pytest.mark.parametrize("engine", ["native", "pandas"])
-def test_text_bytes_identical_per_url(spark, sf_dir, engine):
-    pages, parsed = _collect_parsed(spark, sf_dir, engine)
+def test_text_bytes_identical_per_url(spark, sf_dir):
+    pages, parsed = _collect_parsed(spark, sf_dir)
     got = {
         r["url"]: r["text_bytes"]
         for r in parsed.filter(

@@ -93,41 +93,44 @@ def test_xxhash64_kernel_matches_spark(spark):
 
 
 def test_simhash_native_matches_kernel(spark, sf_dir):
+    """simhash_signatures (native token hashes + Arrow-batched majority
+    fold) equals the hashing.simhash64 scalar kernel value for value,
+    including empty and NULL text (no tokens → 0) and one- and two-word
+    texts."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
-    sigs = simhash_signatures(docs, vectorized=False)
-    plan = sigs._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "ArrowEval" not in plan
-    got = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
-    for r in docs.select("doc_id", "text").collect():
-        u = H.simhash64(r["text"] or "")
-        want = u - (1 << 64 if u >= 1 << 63 else 0)
-        assert got[r["doc_id"]] == want, r["doc_id"]
-
-
-def test_vectorized_folds_byte_identical_to_native(spark, sf_dir):
-    """The Arrow-batched MinHash and SimHash folds (the defaults) must
-    emit EXACTLY the native interpreted folds' signatures — both are pure
-    int64 arithmetic, so equality is bitwise, not approximate. Fixture
-    includes empty text (no shingles/tokens: minhash sig all-P31 init,
-    simhash 0) and short texts."""
-    from bocadillo_spark.operators.dedup import minhash_bands
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
     extra = spark.createDataFrame(
         [(900001, ""), (900002, "one"), (900003, "two words"), (900004, None)],
         "doc_id long, text string",
     )
     docs = docs.select("doc_id", "text").unionByName(extra)
+    got = {r["doc_id"]: r["simhash"] for r in simhash_signatures(docs).collect()}
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    assert len(got) == len(texts) == 34
+    for doc_id, text in texts.items():
+        u = H.simhash64(text or "")
+        want = u - (1 << 64 if u >= 1 << 63 else 0)
+        assert got[doc_id] == want, doc_id
+    assert got[900001] == got[900004] == 0
 
-    bv = minhash_bands(docs, fast=False, vectorized=True)
-    bn = minhash_bands(docs, fast=False, vectorized=False)
-    assert sorted(map(tuple, bv.collect())) == sorted(map(tuple, bn.collect()))
 
-    sv = {r["doc_id"]: r["simhash"]
-          for r in simhash_signatures(docs, vectorized=True).collect()}
-    sn = {r["doc_id"]: r["simhash"]
-          for r in simhash_signatures(docs, vectorized=False).collect()}
-    assert sv == sn and len(sv) == 204
+def test_word_3gram_col_null_contract(spark):
+    """NULL in → NULL out: NULL text gives a NULL shingle array (where ''
+    gives ['  ']), a NULL Jaccard, and no explode row."""
+    from bocadillo_spark.operators.dedup import jaccard_col, word_3gram_col
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "a b")], "id long, text string"
+    ).select("id", word_3gram_col(F.col("text")).alias("g"))
+    rows = {
+        r["id"]: (r["g"], r["j"])
+        for r in df.select("id", "g", jaccard_col(F.col("g"), F.col("g")).alias("j"))
+        .collect()
+    }
+    assert rows == {1: (None, None), 2: (["  "], 1.0), 3: (["a b "], 1.0)}
+    exploded = sorted(
+        (r["id"], r["s"]) for r in df.select("id", F.explode("g").alias("s")).collect()
+    )
+    assert exploded == [(2, "  "), (3, "a b ")]
 
 
 def test_fast_shingle_kernel_cardinalities_match_native(spark, sf_dir):

@@ -1,7 +1,7 @@
-"""Adversarial/malformed-input parsing: the parser must never throw and the
-three implementations (scalar refparser, native JVM, pandas) must agree on
-arbitrary garbage — the recover-with-hexdump precedent
-(/root/reference/binlog/event_rows.go:43-59) as a property."""
+"""Adversarial/malformed-input parsing: the parser must never throw, and the
+Spark parse must agree with the scalar refparser on arbitrary garbage — the
+recover-with-hexdump precedent (the reference's
+binlog/event_rows.go:43-59) as a property."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bocadillo_spark import refparser as rp
-from bocadillo_spark.operators.parse import parse_events_native, parse_events_pandas
+from bocadillo_spark.operators.parse import parse_events
 
 MARK = b"\xc2\xa7"
 
@@ -86,28 +86,28 @@ def test_spark_engines_agree_with_refparser_on_adversarial(spark):
                     r["seq"],
                     r["event_type"],
                     r["payload"],
+                    r["meta_lang"],
                     bytes(r["text_bytes"]) if r["text_bytes"] is not None else None,
                     r["parse_status"],
                 )
             )
         return {k: sorted(v) for k, v in out.items()}
 
-    nat = norm(parse_events_native(pages))
-    pan = norm(parse_events_pandas(pages))
-    assert nat == pan
-
-    # and both agree with the scalar oracle
+    parsed = norm(parse_events(pages))
     for i, html in enumerate(ADVERSARIAL):
         url = f"https://h000.example.com/adv/{i}"
         ref = rp.parse_page(html)
-        got = nat[url]
+        got = parsed[url]
         if ref.parse_status == rp.PARSE_ERROR:
-            assert got == [(0, "parse_error", None, None, "error")], (i, got)
+            assert got == [(0, "parse_error", None, None, None, "error")], (i, got)
         elif not ref.events:
-            assert got == [(0, "none", None, ref.text_bytes, "ok")], (i, got)
+            assert got == [
+                (0, "none", None, ref.meta_lang, ref.text_bytes, "ok")
+            ], (i, got)
         else:
             want = [
-                (seq, t, pl, ref.text_bytes if seq == 0 else None, "ok")
+                (seq, t, pl, ref.meta_lang,
+                 ref.text_bytes if seq == 0 else None, "ok")
                 for seq, t, pl in ref.events
             ]
             assert got == sorted(want), (i, got, want)
@@ -115,21 +115,19 @@ def test_spark_engines_agree_with_refparser_on_adversarial(spark):
 
 def test_parse_null_html_dead_letter(spark):
     """REVIEW_r06 fourth pass #1: a NULL html cell must yield one
-    parse_error/no_body dead-letter row in BOTH engines (refparser:
-    `if not html`; pandas engine: NaN body), never an 'ok' row routed to a
-    real sink."""
+    parse_error/no_body dead-letter row, as refparser does (`if not
+    html`), never an 'ok' row routed to a real sink."""
     rows = [("https://h000.example.com/n/0", dt.datetime(2024, 1, 1), None, None, "en")]
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     ).withColumn("host", __import__("pyspark").sql.functions.lit("h000"))
     want = [(0, "parse_error", None, None, rp.PARSE_ERROR, rp.ERR_NO_BODY)]
-    for parsed in (parse_events_native(pages), parse_events_pandas(pages)):
-        got = [
-            (r["seq"], r["event_type"], r["payload"], r["text_bytes"],
-             r["parse_status"], r["error_msg"])
-            for r in parsed.collect()
-        ]
-        assert got == want
+    got = [
+        (r["seq"], r["event_type"], r["payload"], r["text_bytes"],
+         r["parse_status"], r["error_msg"])
+        for r in parse_events(pages).collect()
+    ]
+    assert got == want
     assert rp.parse_page(None).parse_status == rp.PARSE_ERROR
 
 

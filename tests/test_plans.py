@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bocadillo_spark.operators.aggregate import sink_counts
-from bocadillo_spark.operators.parse import parse_events_native, with_host
+from bocadillo_spark.operators.parse import parse_events, with_host
 from bocadillo_spark.operators.route import build_routing_dim, route
 from bocadillo_spark.synth import synth_pages
 
@@ -28,7 +28,7 @@ def test_counts_plan_shape(spark, sf_dir, tmp_path):
     synth_pages(spark, sf_dir).write.parquet(path)
     pages = spark.read.parquet(path)
     plan = _formatted(
-        sink_counts(route(parse_events_native(with_host(pages)), build_routing_dim(spark)))
+        sink_counts(route(parse_events(with_host(pages)), build_routing_dim(spark)))
     )
     # dim lookup is a broadcast hash join, never a shuffle join
     assert "BroadcastHashJoin" in plan
@@ -297,27 +297,6 @@ def test_cleanops_plans_python_free_and_broadcast(spark, sf_dir):
 
     plan = _formatted(QUERIES["pii_redaction"](spark, sf_dir))
     assert "Exchange" not in plan.replace("BroadcastExchange", "")
-
-
-def test_repetition_arrayop_twin_equals_exploded_plan(spark, sf_dir):
-    """The shuffle-free array-expression variant of the Gopher repetition
-    scores must match the graded explode→agg plan row-for-row (same
-    fractions to the last double bit — both are int/int divisions), and
-    its plan must contain no Exchange at all."""
-    from bocadillo_spark.operators.textops import (
-        repetition_scores,
-        repetition_scores_arrayop,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = {r["doc_id"]: (r["top_bigram_frac"], r["dup_trigram_frac"], r["flagged"])
-         for r in repetition_scores(docs).collect()}
-    b = {r["doc_id"]: (r["top_bigram_frac"], r["dup_trigram_frac"], r["flagged"])
-         for r in repetition_scores_arrayop(docs).collect()}
-    assert a == b and len(a) > 0
-
-    plan = _formatted(repetition_scores_arrayop(docs))
-    assert "Exchange" not in plan
 
 
 def test_round4_ops_plans_python_free(spark, sf_dir):

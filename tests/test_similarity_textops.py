@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -380,42 +382,51 @@ def test_embedding_lsh_band_sizing_and_cap(spark, sf_dir):
     assert capped <= pairs
 
 
-def test_lsh_band_keys_pandas_matches_expression(spark, sf_dir):
-    """The Arrow-batched matmul projection (lsh_band_keys_pandas, the
-    default inside embedding_bands) emits EXACTLY the band keys of the
-    interpreted higher-order-expression twin on real fixture embeddings —
-    the two paths may only diverge on dots at exactly 0.0, measure-zero
-    for real-valued vectors."""
-    from bocadillo_spark.functions import hashing as H
-    from bocadillo_spark.operators.similarity import (
-        lsh_band_keys_col,
-        lsh_band_keys_pandas,
-    )
+def _registry_vs_oracle(spark, sf_dir, name):
+    """(spark rowset, DuckDB oracle rowset) of one registry entry, both
+    normalized by tools/compare_core.rowset."""
+    import duckdb
 
-    bits = 5
-    planes = H.hyperplanes(64, n=16 * bits)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
-    both = emb.select(
-        "vec_id",
-        lsh_band_keys_col(F.col("e"), planes, bits).alias("expr_keys"),
-        lsh_band_keys_pandas(planes, bits)(F.col("e")).alias("pd_keys"),
-    )
-    assert both.where(F.col("expr_keys") != F.col("pd_keys")).count() == 0
-    assert both.count() > 0
+    import __spark_entry__ as entrymod
+    from tools.compare_core import register_views, rowset
+
+    df = entrymod.queries()[name](spark, sf_dir)
+    got = rowset(df.columns, [tuple(r) for r in df.collect()])
+    con = duckdb.connect()
+    try:
+        register_views(con, sf_dir)
+        rel = con.sql(entrymod.oracle_sql()[name])
+        want = rowset(rel.columns, rel.fetchall())
+    finally:
+        con.close()
+    return got, want
+
+
+@contextlib.contextmanager
+def _arrow_batch(spark, n):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, "10000")
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_bucket_scan_matches_joined_verify(spark, sf_dir):
-    """The bucket-scan plan (default embedding_near_dup_pairs) returns
-    the same pair set and 6-decimal cosines as the join-based twin —
-    including under a tiny max_bucket (cap enforced mid-stream) and a
-    tiny Arrow batch size (buckets forced to span batch boundaries, the
-    carry path)."""
-    from bocadillo_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-        embedding_near_dup_pairs_joined,
-    )
+    """The bucket-scan plan (dedup_embedding) returns the all-pairs DuckDB
+    oracle's pairs and 6-decimal cosines, also under a tiny Arrow batch
+    size (buckets forced to span batch boundaries, the carry path). A cap
+    that really drops buckets gives a strict subset of the oracle's
+    pairs, independent of the batch size (cap enforced mid-stream). The
+    name predates the deletion of the join-based verify twin."""
+    from bocadillo_spark.operators.similarity import embedding_near_dup_pairs
+
+    got, want = _registry_vs_oracle(spark, sf_dir, "dedup_embedding")
+    assert got == want and len(want) > 0
+    with _arrow_batch(spark, 7):
+        got7, _ = _registry_vs_oracle(spark, sf_dir, "dedup_embedding")
+    assert got7 == want
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
@@ -426,60 +437,38 @@ def test_bucket_scan_matches_joined_verify(spark, sf_dir):
     )
     aug = emb.unionByName(variants)
 
-    def pairset(df):
-        return {
-            (r["vec_id_a"], r["vec_id_b"], round(r["cos"], 6))
-            for r in df.collect()
-        }
+    def capped():
+        df = embedding_near_dup_pairs(aug, bits_per_band=4, max_bucket=20)
+        return {(r["vec_id_a"], r["vec_id_b"]) for r in df.collect()}
 
-    assert pairset(embedding_near_dup_pairs(aug)) == pairset(
-        embedding_near_dup_pairs_joined(aug)
-    )
-    # capped: both paths drop the same buckets
-    assert pairset(embedding_near_dup_pairs(aug, max_bucket=3)) == pairset(
-        embedding_near_dup_pairs_joined(aug, max_bucket=3)
-    )
-    # tiny Arrow batches exercise the cross-batch bucket carry
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        assert pairset(embedding_near_dup_pairs(aug)) == pairset(
-            embedding_near_dup_pairs_joined(aug)
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    # rowset orders columns by name: (cos_sim, vec_id_a, vec_id_b)
+    oracle_pairs = {(int(a), int(b)) for _, a, b in want}
+    cap = capped()
+    assert cap < oracle_pairs
+    with _arrow_batch(spark, 7):
+        assert capped() == cap
 
 
 def test_brute_force_vectorized_equals_crossjoin_twin(spark, sf_dir):
-    """The mapInPandas partial-top-k brute force (the default) must return
-    the same (q_id, neighbor_id) rows and round-9 cosines as the
-    crossJoin + interpreted-fold twin, including under tiny Arrow batches
-    (partial top-k accumulated across many batches)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q, c = split_query_candidates(emb, n_queries=4)
-
-    def rows(df):
-        return sorted(
-            (r["q_id"], r["neighbor_id"], round(r["cos"], 9)) for r in df.collect()
-        )
-
-    assert rows(brute_force_topk(q, c, k=7, vectorized=True)) == rows(
-        brute_force_topk(q, c, k=7, vectorized=False)
-    )
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
-    try:
-        assert rows(brute_force_topk(q, c, k=7, vectorized=True)) == rows(
-            brute_force_topk(q, c, k=7, vectorized=False)
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    """ann_cosine_topk (brute_force_topk: per-partition partial top-k over
+    Arrow batches, exact global window) returns its DuckDB oracle's rows,
+    also when the partial top-k is accumulated across many tiny
+    batches. The name predates the deletion of the crossJoin twin."""
+    got, want = _registry_vs_oracle(spark, sf_dir, "ann_cosine_topk")
+    assert got == want and len(want) == 50
+    with _arrow_batch(spark, 13):
+        got13, _ = _registry_vs_oracle(spark, sf_dir, "ann_cosine_topk")
+    assert got13 == want
 
 
 def test_ivf_assign_vectorized_equals_minby_twin(spark, sf_dir):
-    """The batched-argmin IVF assignment (the default) must agree with the
-    crossJoin + min_by twin on every vector (kmeans centroids: no exact
-    distance ties, so both argmins are unambiguous)."""
+    """The batched-argmin IVF assignment picks, for every vector, the
+    centroid DuckDB's arg_min over list_distance picks (kmeans centroids:
+    no exact distance ties, so the argmin is unambiguous). The name
+    predates the deletion of the crossJoin + min_by twin."""
+    import duckdb
+    import pyarrow as pa
+
     from bocadillo_spark.operators.similarity import (
         _as_double,
         ivf_assign,
@@ -491,11 +480,24 @@ def test_ivf_assign_vectorized_equals_minby_twin(spark, sf_dir):
     )
     cents = kmeans_centroids(e, n_clusters=12)
     assert cents is not None
-    av = {r["vec_id"]: r["list_id"]
-          for r in ivf_assign(e, cents, vectorized=True).collect()}
-    an = {r["vec_id"]: r["list_id"]
-          for r in ivf_assign(e, cents, vectorized=False).collect()}
-    assert av == an and len(av) > 0
+    got = {r["vec_id"]: r["list_id"] for r in ivf_assign(e, cents).collect()}
+
+    er, cr = e.collect(), cents.collect()
+    vecs = pa.table({"vec_id": [r["vec_id"] for r in er],
+                     "e": [list(r["e"]) for r in er]})
+    cent = pa.table({"centroid_id": [r["centroid_id"] for r in cr],
+                     "ce": [list(r["ce"]) for r in cr]})
+    con = duckdb.connect()
+    try:
+        con.register("vecs", vecs)
+        con.register("cent", cent)
+        want = dict(con.sql(
+            "SELECT vec_id, arg_min(centroid_id, list_distance(e, ce)) "
+            "FROM vecs CROSS JOIN cent GROUP BY 1"
+        ).fetchall())
+    finally:
+        con.close()
+    assert got == want and len(got) == len(er) > 0
 
 
 # ---------------------------------------------------------------------------

@@ -72,74 +72,3 @@ def test_ttl_eviction_path():
     out = list(make_tracker(ttl_ms=1000)((7,), iter([]), st))
     assert out == []
     assert st.removed
-
-
-def test_tws_user_tracker_converges_to_batch(spark, sf_dir):
-    """transformWithStateInPandas twin: same invariant, Spark-4 path.
-    Requires the RocksDB state store provider (restored after) AND the
-    protobuf package (TWS's Python state-server wire format) — skipped
-    where protobuf is absent, as in this container."""
-    import importlib.util
-
-    import pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # find_spec imports the parent package
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("protobuf not installed: TWS python state server cannot start")
-    from bocadillo_spark.streaming.stateful import user_activity_stream_tws
-
-    ev_path = f"{sf_dir}/events.parquet"
-    batch = spark.read.parquet(ev_path)
-    expected = {
-        r["user_id"]: (r["n"], r["v"])
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 100)) / 100).alias("v"),
-        )
-        .collect()
-    }
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        with tempfile.TemporaryDirectory() as tmp:
-            spark.read.parquet(ev_path).repartition(5).write.parquet(f"{tmp}/events")
-            stream = (
-                spark.readStream.schema(batch.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/events")
-            )
-            q = (
-                user_activity_stream_tws(stream)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName("user_tracker_tws")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-    rows = spark.sql("SELECT * FROM user_tracker_tws").collect()
-    assert len(rows) > len(expected)  # state really spanned micro-batches
-    last = {}
-    for r in rows:
-        cur = last.get(r["user_id"])
-        if cur is None or r["total_events"] > cur[0]:
-            last[r["user_id"]] = (r["total_events"], r["total_value"])
-    got = {u: (n, round(v, 2)) for u, (n, v) in last.items()}
-    want = {u: (n, round(v, 2)) for u, (n, v) in expected.items()}
-    assert got == want
