@@ -1,20 +1,17 @@
-"""Per-sink aggregate counts (north_rule) + salted two-phase aggregation.
+"""Per-sink aggregate counts (north_rule).
 
 The reference has no aggregation (SURVEY.md §2.4); the target requires
 per-sink routed-row counts that equal the scalar oracle's exactly. Counts
 use Spark's built-in hash aggregate (partial map-side + final — already a
-two-phase combine). For hot keys (the Zipf host fixture, ~60% of rows on 2
-hosts) we additionally provide an explicit salted two-phase variant: AQE
-skew-join handles skewed *joins*, not skewed groupBy keys, so salting is
-manual (SURVEY.md §4 rewrite table).
+two-phase combine). A hot key (the Zipf host fixture, ~60% of rows on 2
+hosts) needs no salt: the map-side partial aggregate collapses it to one
+row per task before the shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-N_SALT = 16
 
 
 def sink_counts(routed: DataFrame) -> DataFrame:
@@ -25,18 +22,6 @@ def sink_counts(routed: DataFrame) -> DataFrame:
         routed.groupBy("sink_id", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def sink_counts_salted(routed: DataFrame, n_salt: int = N_SALT) -> DataFrame:
-    """Two-phase: partial by (sink, event_type, salt), final by (sink,
-    event_type). Counts must be identical to sink_counts() — the skew
-    fixture test asserts it. salt = pmod(hash(url), n) spreads a hot key
-    over n reducers in phase 1."""
-    salted = routed.withColumn("salt", F.pmod(F.hash("url"), F.lit(n_salt)))
-    partial = salted.groupBy("sink_id", "event_type", "salt").agg(
-        F.count(F.lit(1)).alias("pn")
-    )
-    return partial.groupBy("sink_id", "event_type").agg(F.sum("pn").alias("n"))
 
 
 def global_rank_two_pass(

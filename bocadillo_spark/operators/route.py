@@ -22,7 +22,7 @@ ERROR_SINK = "error"
 _LANGS_SQL = ", ".join(f"'{lang}'" for lang in KNOWN_LANGS)
 _DIM_SQL = f"""
 SELECT lang, host, concat('sink_', lang) AS sink_id,
-       concat('schema_', lang) AS schema_id, host_id <= 1 AS hot
+       concat('schema_', lang) AS schema_id
 FROM (SELECT element_at(array({_LANGS_SQL}), CAST(id DIV :n_hosts AS INT) + 1) AS lang,
              format_string('h%03d', CAST(id % :n_hosts AS INT)) AS host,
              id % :n_hosts AS host_id
@@ -37,10 +37,9 @@ SELECT /*+ BROADCAST(d) */ e.*,
        CASE WHEN e.parse_status = :parse_error THEN 'parse_error'
             WHEN d.sink_id IS NULL THEN 'unmatched_dim'
             ELSE 'ok' END AS route_reason,
-       d.schema_id,
-       coalesce(d.hot, false) AS hot
+       d.schema_id
 FROM {events} e
-LEFT JOIN (SELECT lang, host, sink_id, schema_id, hot FROM {dim}) d
+LEFT JOIN (SELECT lang, host, sink_id, schema_id FROM {dim}) d
   ON e.lang = d.lang AND e.host = d.host
 """
 

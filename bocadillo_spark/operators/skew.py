@@ -10,9 +10,9 @@ a high-cardinality fact column to the fact side and (b) replicating the
 dim side once per salt value. Results are row-identical to the unsalted
 join (asserted in tests/test_skew.py); only the physical distribution
 changes. AQE's skewedJoin covers sort-merge spills at runtime; explicit
-salting is the static variant that also works for shuffled-hash joins and
-for groupBy-style hot keys (operators/aggregate.py::sink_counts_salted is
-the aggregation twin).
+salting is the static variant that also works for shuffled-hash joins. A
+hot groupBy key needs no salt: the map-side partial aggregate already
+collapses it (operators/aggregate.py::sink_counts).
 """
 
 from __future__ import annotations

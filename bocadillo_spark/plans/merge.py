@@ -27,6 +27,11 @@ PROTOCOL on plain parquet behind the existing sink seam:
 - old snapshots stay readable through their own manifests → version-based
   time travel; expiry respects cross-snapshot references.
 
+This is the table's only commit protocol. A manifest without a bucket map
+(the pre-bucketing flat layout) or with merge-on-read `deltas`/`deletes`
+entries (an earlier protocol) raises ValueError wherever it is read or
+expired, instead of being misread.
+
 Row counts come from a pre-write aggregate over the (persisted) merged
 buckets plus the carried manifest entries — no post-write table re-scan.
 
@@ -35,8 +40,6 @@ manifest). 16 suits the test fixtures; at 100 TB you create with O(10^3-10^4)
 buckets so one bucket ≈ one task's worth of data — hash(key) keeps them
 uniform, and the per-commit write parallelism equals the touched-bucket
 count, which for CDC batches is exactly the data you must rewrite anyway.
-Merge-on-read (delete files + compaction) is the documented alternative
-when update rates dwarf reads.
 """
 
 from __future__ import annotations
@@ -86,12 +89,26 @@ def table_history(table_dir: str) -> list[dict]:
     return out
 
 
-def _load_meta(table_dir: str, version: int) -> dict | None:
+def _check_layout(meta: dict) -> dict:
+    """Reject manifests this protocol does not write: the pre-bucketing flat
+    layout (no `buckets`) and merge-on-read entries (`deltas`/`deletes`).
+    Table directories outlive code versions; reading either as plain
+    buckets would drop rows, and expiring by `owner` alone would delete
+    data the manifest still references."""
+    v = meta["version"]
+    if meta.get("buckets") is None:
+        raise ValueError(f"snapshot v{v} has no bucket manifest (unsupported flat layout)")
+    if any(e.get("deltas") or e.get("deletes") for e in meta["buckets"].values()):
+        raise ValueError(f"snapshot v{v} carries merge-on-read deltas/deletes (unsupported)")
+    return meta
+
+
+def _load_meta(table_dir: str, version: int) -> dict:
     path = os.path.join(_meta_dir(table_dir), f"v{version:06d}.json")
     if not os.path.exists(path):
-        return None
+        raise ValueError(f"snapshot v{version} has no metadata")
     with open(path) as f:
-        return json.load(f)
+        return _check_layout(json.load(f))
 
 
 def _committed_batch_ids(table_dir: str) -> set:
@@ -110,35 +127,14 @@ def _committed_batch_ids(table_dir: str) -> set:
 def _bucket_paths(table_dir: str, meta: dict, only: list[int] | None = None) -> list[str]:
     """Data directories a snapshot's manifest references (possibly owned by
     OLDER snapshots — the carry-by-reference trick)."""
-    buckets = meta.get("buckets") or {}
     out = []
-    for k, info in sorted(buckets.items(), key=lambda kv: int(kv[0])):
+    for k, info in sorted(meta["buckets"].items(), key=lambda kv: int(kv[0])):
         if only is not None and int(k) not in only:
             continue
         out.append(
             os.path.join(_snap_dir(table_dir, int(info["owner"])), f"__bucket={k}")
         )
     return out
-
-
-def _snapshot_schema(spark: SparkSession, meta: dict) -> StructType | None:
-    sj = meta.get("schema_json")
-    return StructType.fromJson(json.loads(sj)) if sj else None
-
-
-def _delete_dir(table_dir: str, version: int, bucket: int) -> str:
-    return os.path.join(
-        _snap_dir(table_dir, version), "__deletes", f"__bucket={bucket}"
-    )
-
-
-def _selected_entries(meta: dict, only_buckets: list[int] | None) -> dict:
-    buckets = meta.get("buckets") or {}
-    return {
-        k: e
-        for k, e in buckets.items()
-        if only_buckets is None or int(k) in only_buckets
-    }
 
 
 def _read_snapshot(
@@ -151,18 +147,9 @@ def _read_snapshot(
     those buckets' directories — the partition-scoped read the MERGE
     anti-join uses. Reads with the snapshot's recorded (union) schema, so
     buckets written before a schema evolution surface NULL for newer
-    columns. Buckets carrying merge-on-read deltas/tombstones are resolved
-    by _read_mor (base ∪ deltas, anti-tombstone)."""
-    if meta.get("buckets") is None:  # legacy flat layout (pre-bucketing)
-        snap = _snap_dir(table_dir, meta["version"])
-        if not os.path.isdir(snap):
-            raise ValueError(f"snapshot v{meta['version']} data expired (metadata retained)")
-        return spark.read.parquet(snap)
-    entries = _selected_entries(meta, only_buckets)
-    if any(e.get("deltas") or e.get("deletes") for e in entries.values()):
-        return _read_mor(spark, table_dir, meta, entries)
+    columns."""
     paths = _bucket_paths(table_dir, meta, only_buckets)
-    schema = _snapshot_schema(spark, meta)
+    schema = StructType.fromJson(json.loads(meta["schema_json"]))
     if not paths:
         return spark.createDataFrame([], schema)
     for p in paths:
@@ -173,87 +160,50 @@ def _read_snapshot(
     return spark.read.schema(schema).parquet(*paths)
 
 
-def _read_mor(
-    spark: SparkSession, table_dir: str, meta: dict, entries: dict
-) -> DataFrame:
-    """Merge-on-read resolution: every data segment (the bucket's base plus
-    its stacked delta files) is read tagged with its commit version; the
-    per-bucket tombstone files yield each key's max delete version; a row
-    survives iff no LATER commit tombstoned its key (a commit's own delta
-    rows supersede its tombstone, so `dead_v <= seg_v` keeps them). One
-    extra join per read — the read amplification MOR trades for O(batch)
-    writes — folded away by compact(). Segment count is bounded by epochs
-    since the last compaction."""
-    key_cols = meta.get("key") or []
-    schema = _snapshot_schema(spark, meta)
-    seg_by_v: dict[int, list[str]] = {}
-    del_by_v: dict[int, list[str]] = {}
-    for k, e in sorted(entries.items(), key=lambda kv: int(kv[0])):
-        seg_by_v.setdefault(int(e["owner"]), []).append(
-            os.path.join(_snap_dir(table_dir, int(e["owner"])), f"__bucket={k}")
-        )
-        for d in e.get("deltas") or []:
-            seg_by_v.setdefault(int(d["version"]), []).append(
-                os.path.join(_snap_dir(table_dir, int(d["version"])), f"__bucket={k}")
-            )
-        for dv in e.get("deletes") or []:
-            del_by_v.setdefault(int(dv), []).append(
-                _delete_dir(table_dir, int(dv), int(k))
-            )
-    for paths in list(seg_by_v.values()) + list(del_by_v.values()):
-        for p in paths:
-            if not os.path.isdir(p):
-                raise ValueError(
-                    f"snapshot v{meta['version']} data expired (metadata retained)"
-                )
-    rows = None
-    for v in sorted(seg_by_v):
-        part = spark.read.schema(schema).parquet(*seg_by_v[v]).withColumn(
-            "__seg_v", F.lit(v)
-        )
-        rows = part if rows is None else rows.unionByName(part)
-    dels = None
-    for v in sorted(del_by_v):
-        part = (
-            spark.read.parquet(*del_by_v[v])
-            .select(*key_cols)
-            .withColumn("__del_v", F.lit(v))
-        )
-        dels = part if dels is None else dels.unionByName(part)
-    if dels is None:
-        return rows.drop("__seg_v")
-    dead = dels.groupBy(*key_cols).agg(F.max("__del_v").alias("__dead_v"))
-    return (
-        rows.join(dead, key_cols, "left")
-        .where(F.col("__dead_v").isNull() | (F.col("__dead_v") <= F.col("__seg_v")))
-        .drop("__seg_v", "__dead_v")
-    )
-
-
 def read_table(spark: SparkSession, table_dir: str, version: int | None = None) -> DataFrame:
     """Read the table at `version` (default: latest) — snapshot time travel."""
     v = current_version(table_dir) if version is None else version
     if v == 0:
         raise ValueError("table has no committed snapshot")
-    meta = _load_meta(table_dir, v)
-    if meta is None:
-        raise ValueError(f"snapshot v{v} has no metadata")
-    return _read_snapshot(spark, table_dir, meta)
+    return _read_snapshot(spark, table_dir, _load_meta(table_dir, v))
 
 
-def _commit(table_dir: str, meta: dict) -> None:
-    """Metadata json first, then the atomic pointer swap."""
+def _commit(
+    table_dir: str,
+    version: int,
+    operation: str,
+    batch_id: int | str | None,
+    key_cols: list[str],
+    n_buckets: int,
+    buckets: dict[str, dict],
+    schema: StructType,
+) -> dict:
+    """Metadata json first, then the atomic pointer swap. Returns the
+    committed metadata."""
+    meta = {
+        "version": version,
+        "parent": version - 1,
+        "operation": operation,
+        "batch_id": batch_id,
+        "key": list(key_cols),
+        "n_buckets": n_buckets,
+        "buckets": buckets,
+        "row_count": sum(i["rows"] for i in buckets.values()),
+        "schema": schema.simpleString(),
+        "schema_json": json.dumps(schema.jsonValue()),
+    }
     md = _meta_dir(table_dir)
     os.makedirs(md, exist_ok=True)
-    mpath = os.path.join(md, f"v{meta['version']:06d}.json")
+    mpath = os.path.join(md, f"v{version:06d}.json")
     tmp = mpath + ".tmp"
     with open(tmp, "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True)
     os.replace(tmp, mpath)
     ptr_tmp = os.path.join(table_dir, "._latest.tmp")
     with open(ptr_tmp, "w") as f:
-        f.write(str(meta["version"]))
+        f.write(str(version))
     os.replace(ptr_tmp, os.path.join(table_dir, "_latest"))  # the commit point
+    return meta
 
 
 def _dedupe_updates(updates: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -272,11 +222,12 @@ def _dedupe_updates(updates: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _write_bucketed(
-    merged: DataFrame, key_cols: list[str], n_buckets: int, snap: str
-) -> dict[int, int]:
+    merged: DataFrame, key_cols: list[str], n_buckets: int, table_dir: str, version: int
+) -> dict[str, dict]:
     """Persist → per-bucket counts (pre-write, no read-back) → one
-    partitionBy write with exactly one file per touched bucket. Returns
-    {bucket: rows} for the buckets this snapshot physically wrote."""
+    partitionBy write with exactly one file per touched bucket. Returns the
+    manifest entries {bucket: {owner, rows}} for the non-empty buckets this
+    snapshot physically wrote."""
     b = merged.withColumn("__bucket", _bucket_col(key_cols, n_buckets)).persist()
     try:
         counts = {
@@ -287,22 +238,13 @@ def _write_bucketed(
             b.repartition(max(len(counts), 1), "__bucket")
             .write.mode("overwrite")
             .partitionBy("__bucket")
-            .parquet(snap)
+            .parquet(_snap_dir(table_dir, version))
         )
     finally:
         b.unpersist()
-    return counts
-
-
-def _union_schema(parent_schema: StructType, ups_schema: StructType) -> StructType:
-    """Iceberg add-column semantics without reading data: parent fields in
-    order, then any batch-new fields appended."""
-    from pyspark.sql.types import StructField
-
-    names = {f.name for f in parent_schema.fields}
-    fields: list[StructField] = list(parent_schema.fields)
-    fields.extend(f for f in ups_schema.fields if f.name not in names)
-    return StructType(fields)
+    return {
+        str(k): {"owner": version, "rows": cnt} for k, cnt in counts.items() if cnt > 0
+    }
 
 
 def merge_upsert(
@@ -313,33 +255,23 @@ def merge_upsert(
     batch_id: int | str,
     delete_col: str | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
-    mor: bool = False,
 ) -> dict:
     """MERGE INTO target USING updates ON key:
     matched → replace row (or delete when `delete_col` is true),
     not matched → insert. Returns the committed snapshot metadata.
 
-    Partition-scoped COW (default): only the key buckets present in the
-    batch are read, anti-joined, and rewritten; all other buckets carry
-    forward by manifest reference (asserted not-rewritten in
+    Partition-scoped COW: only the key buckets present in the batch are
+    read, anti-joined, and rewritten; all other buckets carry forward by
+    manifest reference (asserted not-rewritten in
     tests/test_merge_upsert.py::test_untouched_buckets_not_rewritten).
-
-    Merge-on-read (`mor=True`) — for update rates that dwarf reads: the
-    commit writes ONLY the deduped upsert rows (per-bucket delta files)
-    plus per-bucket tombstone key files; NO base data is read or
-    rewritten, so an epoch writes O(batch) bytes even when every bucket is
-    touched (asserted in test_merge_upsert.py::test_mor_writes_o_batch).
-    Reads resolve base ∪ deltas minus later tombstones (_read_mor);
-    compact() folds the log back into plain COW buckets. Reference
-    analog: the XID-bounded transactional apply defers visibility the
-    same way (/root/reference/reader/enhanced_reader.go:129-147). MOR
-    snapshot metadata records row_count=None (an exact live count would
-    need the very read MOR defers; compact restores it).
+    Keys match null-safely, so a NULL key is one key like any other.
 
     Idempotent under replay two ways: (1) a batch_id already committed is
     skipped entirely; (2) re-merging identical content produces an
-    identical table (upsert is content-idempotent). `n_buckets` applies at
-    table creation; later merges use the recorded value."""
+    identical table (upsert is content-idempotent). A batch with no rows
+    commits nothing (`empty_noop`), so it consumes no version. `n_buckets`
+    applies at table creation; later merges use the recorded value, and
+    `key_cols` must equal the recorded key (ValueError otherwise)."""
     if batch_id in _committed_batch_ids(table_dir):
         v = current_version(table_dir)
         return {"version": v, "batch_id": batch_id, "skipped_replay": True}
@@ -355,49 +287,50 @@ def merge_upsert(
     if parent == 0:
         if updates.isEmpty():
             # nothing to create: an empty parquet dir is unreadable (no
-            # schema), and an empty batch needn't consume a version —
-            # replaying it later is naturally a no-op
+            # schema) — replaying the batch later is naturally a no-op
             return {"version": 0, "batch_id": batch_id, "empty_noop": True}
         merged = ups
         op = "create"
     else:
-        parent_meta = _load_meta(table_dir, parent) or {}
-        n_buckets = int(parent_meta.get("n_buckets", n_buckets))
+        parent_meta = _load_meta(table_dir, parent)
+        if list(key_cols) != parent_meta["key"]:
+            raise ValueError(
+                f"key_cols {list(key_cols)} differ from the table key {parent_meta['key']}"
+            )
+        n_buckets = int(parent_meta["n_buckets"])
         keys = ups.select(*key_cols)
         if deletes is not None:
             keys = keys.unionByName(deletes).distinct()
-        if mor and parent_meta.get("buckets") is not None:
-            return _merge_mor(
-                spark, table_dir, parent, parent_meta, ups, keys,
-                key_cols, n_buckets, batch_id,
-            )
-        if parent_meta.get("buckets") is None:
-            # legacy flat snapshot: one full rewrite upgrades the layout
-            cur = _read_snapshot(spark, table_dir, parent_meta)
-        else:
-            # driver-side touched-bucket set: bounded by n_buckets, the
-            # only collect in the commit path
-            touched = sorted(
-                int(r["__b"])
-                for r in keys.select(
-                    _bucket_col(key_cols, n_buckets).alias("__b")
-                )
-                .distinct()
-                .collect()
-            )
-            cur = _read_snapshot(spark, table_dir, parent_meta, only_buckets=touched)
-            carried = {
-                k: info
-                for k, info in parent_meta["buckets"].items()
-                if int(k) not in touched
-            }
+        # the touched-bucket set (at most n_buckets rows) is the only
+        # collect in the commit path
+        touched = sorted(
+            int(r["__b"])
+            for r in keys.select(_bucket_col(key_cols, n_buckets).alias("__b"))
+            .distinct()
+            .collect()
+        )
+        if not touched:
+            # an empty batch must not consume a version (a long-running CDC
+            # stream would otherwise commit one per idle epoch)
+            return {"version": parent, "batch_id": batch_id, "empty_noop": True}
+        cur = _read_snapshot(spark, table_dir, parent_meta, only_buckets=touched)
+        carried = {
+            k: info
+            for k, info in parent_meta["buckets"].items()
+            if int(k) not in touched
+        }
         # probe the frame actually being broadcast: `keys` includes ALL
         # delete keys, so probing `ups` alone would broadcast an
         # unbounded keyset on a delete-heavy batch (r06 review #1, the
         # one committed-plan scale-killer — delete-heavy batches now take
         # the shuffle join instead)
-        kept = cur.join(
-            F.broadcast(keys) if _small(keys) else keys, key_cols, "left_anti"
+        k = keys.alias("__k")
+        if _small(keys):
+            k = F.broadcast(k)
+        kept = cur.alias("__t").join(
+            k,
+            [F.col(f"__t.{c}").eqNullSafe(F.col(f"__k.{c}")) for c in key_cols],
+            "left_anti",
         )
         # schema evolution (Iceberg add-column semantics): columns new in
         # this batch backfill NULL for pre-existing rows; columns the batch
@@ -408,192 +341,29 @@ def merge_upsert(
         op = "merge"
 
     version = parent + 1
-    written = _write_bucketed(merged, key_cols, n_buckets, _snap_dir(table_dir, version))
-    buckets = dict(carried)
-    for k, cnt in written.items():
-        if cnt > 0:
-            buckets[str(k)] = {"owner": version, "rows": cnt}
-    # A carried MOR entry's 'rows' is its BASE count only: delta rows are
-    # uncounted and tombstoned rows still counted, so summing would
-    # misreport live rows. Record None — as _merge_mor does — and let
-    # compact() restore the exact count.
-    carried_mor = any(
-        e.get("deltas") or e.get("deletes") for e in carried.values()
+    buckets = {**carried, **_write_bucketed(merged, key_cols, n_buckets, table_dir, version)}
+    return _commit(
+        table_dir, version, op, batch_id, key_cols, n_buckets, buckets, merged.schema
     )
-    meta = {
-        "version": version,
-        "parent": parent,
-        "operation": op,
-        "batch_id": batch_id,
-        "key": list(key_cols),
-        "n_buckets": n_buckets,
-        "buckets": buckets,
-        "row_count": (
-            None if carried_mor else sum(i["rows"] for i in buckets.values())
-        ),
-        "schema": merged.schema.simpleString(),
-        "schema_json": json.dumps(merged.schema.jsonValue()),
-    }
-    _commit(table_dir, meta)
-    return meta
 
 
-def _merge_mor(
-    spark: SparkSession,
-    table_dir: str,
-    parent: int,
-    parent_meta: dict,
-    ups: DataFrame,
-    keys: DataFrame,
-    key_cols: list[str],
-    n_buckets: int,
-    batch_id: int | str,
-) -> dict:
-    """The MOR commit: per-bucket delta files (upsert rows only) + per-bucket
-    tombstone key files; zero base reads, zero base rewrites — O(batch)
-    bytes regardless of how many buckets the batch touches."""
-    version = parent + 1
-    snap = _snap_dir(table_dir, version)
-    written = _write_bucketed(ups, key_cols, n_buckets, snap)
-    keysb = keys.withColumn("__bucket", _bucket_col(key_cols, n_buckets)).persist()
-    try:
-        touched = sorted(
-            int(r["__bucket"]) for r in keysb.select("__bucket").distinct().collect()
-        )
-        (
-            keysb.repartition(max(len(touched), 1), "__bucket")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(os.path.join(snap, "__deletes"))
-        )
-    finally:
-        keysb.unpersist()
-    pbuckets = parent_meta["buckets"]
-    touched_set = set(touched)
-    buckets = {k: e for k, e in pbuckets.items() if int(k) not in touched_set}
-    for b in touched:
-        k = str(b)
-        pe = pbuckets.get(k)
-        drows = written.get(b, 0)
-        if pe is None:
-            # brand-new bucket: its delta IS the base; a tombstone with no
-            # older segment is vacuous, so no deletes entry is recorded
-            if drows > 0:
-                buckets[k] = {"owner": version, "rows": drows}
-            continue
-        e = dict(pe)
-        deltas = [dict(d) for d in (pe.get("deltas") or [])]
-        if drows > 0:
-            deltas.append({"version": version, "rows": drows})
-        if deltas:
-            e["deltas"] = deltas
-        e["deletes"] = list(pe.get("deletes") or []) + [version]
-        buckets[k] = e
-    sch = _union_schema(
-        _snapshot_schema(spark, parent_meta) or ups.schema, ups.schema
-    )
-    meta = {
-        "version": version,
-        "parent": parent,
-        "operation": "merge-mor",
-        "batch_id": batch_id,
-        "key": list(key_cols),
-        "n_buckets": n_buckets,
-        "buckets": buckets,
-        "row_count": None,
-        "schema": sch.simpleString(),
-        "schema_json": json.dumps(sch.jsonValue()),
-    }
-    _commit(table_dir, meta)
-    return meta
-
-
-# Compaction-policy knob — the analog of Iceberg's
-# commit.manifest.min-count-to-merge for this table protocol. MOR read cost
-# grows with the longest per-bucket segment chain (base + one delta file
-# per MOR commit that touched the bucket + one tombstone dir per commit):
-# _read_mor unions every segment version and anti-resolves tombstones with
-# one extra join, so a chain of length L reads L file groups where a
-# compacted table reads one. The union itself is linear and fine; what
-# degrades first is file-open/scheduling overhead (L small files per
-# bucket) and the widening tombstone join input. Policy: fold the chains
-# via compact() once ANY bucket's chain exceeds MAX_DELTA_CHAIN — by then
-# read amplification is ~MAX_DELTA_CHAIN x and one O(table) rewrite
-# amortizes it back to 1. Callers on a merge-heavy path invoke
-# maybe_compact() after each commit (or on a maintenance schedule);
-# test_merge.py asserts the chain stays bounded under N small merges.
-MAX_DELTA_CHAIN = 8
-
-
-def delta_chain_length(meta: dict) -> int:
-    """Longest per-bucket MOR segment chain in a snapshot: 1 (base) + its
-    delta files + its tombstone dirs. 1 means fully compacted; COW-only
-    tables never exceed 1."""
-    worst = 0
-    for e in (meta.get("buckets") or {}).values():
-        worst = max(
-            worst, 1 + len(e.get("deltas") or []) + len(e.get("deletes") or [])
-        )
-    return worst
-
-
-def maybe_compact(
-    spark: SparkSession, table_dir: str, max_chain: int = MAX_DELTA_CHAIN
-) -> dict | None:
-    """Apply the compaction policy: compact() iff the current snapshot's
-    longest delta chain exceeds `max_chain`. Returns the compaction commit
-    meta when it ran, else None. Data-identical either way (compact is a
-    pure rewrite), so maintenance can run on any schedule without
-    affecting readers."""
-    meta = _load_meta(table_dir, current_version(table_dir)) or {}
-    if delta_chain_length(meta) > max_chain:
-        return compact(spark, table_dir)
-    return None
-
-
-def compact(spark: SparkSession, table_dir: str, target_files: int = 4) -> dict:
+def compact(spark: SparkSession, table_dir: str) -> dict:
     """Small-file compaction: rewrite the CURRENT snapshot into one file
-    per bucket and commit it as a new SELF-CONTAINED snapshot (operation
-    'compact', no batch_id, no cross-snapshot references). Data-identical
-    by construction; the maintenance op every MERGE-heavy table needs at
-    scale — each COW merge writes fresh files into touched buckets, and
-    read amplification grows until a compaction folds them and lets
-    expiry reclaim the referenced old snapshots. `target_files` is kept
-    for API compatibility; the bucketed layout compacts to exactly one
-    file per live bucket."""
+    per live bucket and commit it as a new SELF-CONTAINED snapshot
+    (operation 'compact', no batch_id, no cross-snapshot references).
+    Data-identical by construction; the maintenance op every MERGE-heavy
+    table needs at scale — each COW merge writes fresh files into touched
+    buckets, and read amplification grows until a compaction folds them
+    and lets expiry reclaim the referenced old snapshots."""
     parent = current_version(table_dir)
-    parent_meta = _load_meta(table_dir, parent) or {}
     cur = read_table(spark, table_dir, parent)
-    key_cols = parent_meta.get("key") or []
-    n_buckets = int(parent_meta.get("n_buckets", DEFAULT_BUCKETS))
+    parent_meta = _load_meta(table_dir, parent)
+    key_cols, n_buckets = parent_meta["key"], int(parent_meta["n_buckets"])
     version = parent + 1
-    snap = _snap_dir(table_dir, version)
-    if key_cols:
-        written = _write_bucketed(cur, key_cols, n_buckets, snap)
-        buckets = {
-            str(k): {"owner": version, "rows": cnt}
-            for k, cnt in written.items()
-            if cnt > 0
-        }
-        n = sum(i["rows"] for i in buckets.values())
-    else:  # legacy snapshot without a recorded key: flat coalesce
-        cur.coalesce(target_files).write.mode("overwrite").parquet(snap)
-        buckets = None
-        n = cur.count()
-    meta = {
-        "version": version,
-        "parent": parent,
-        "operation": "compact",
-        "batch_id": None,
-        "key": key_cols or None,
-        "n_buckets": n_buckets,
-        "buckets": buckets,
-        "row_count": int(n),
-        "schema": cur.schema.simpleString(),
-        "schema_json": json.dumps(cur.schema.jsonValue()),
-    }
-    _commit(table_dir, meta)
-    return meta
+    buckets = _write_bucketed(cur, key_cols, n_buckets, table_dir, version)
+    return _commit(
+        table_dir, version, "compact", None, key_cols, n_buckets, buckets, cur.schema
+    )
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
@@ -609,16 +379,10 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     referenced: set[int] = set()
     for meta in history:
         v = meta["version"]
-        if v > latest - keep_last or v == latest:
-            if meta.get("buckets") is None:
-                referenced.add(v)
-            else:
-                for e in meta["buckets"].values():
-                    referenced.add(int(e["owner"]))
-                    referenced.update(
-                        int(d["version"]) for d in (e.get("deltas") or [])
-                    )
-                    referenced.update(int(dv) for dv in (e.get("deletes") or []))
+        if latest - max(keep_last, 1) < v <= latest:
+            referenced.update(
+                int(e["owner"]) for e in _check_layout(meta)["buckets"].values()
+            )
     expired = []
     for meta in history:
         v = meta["version"]

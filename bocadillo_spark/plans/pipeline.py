@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregate import sink_counts, sink_counts_salted
+from ..operators.aggregate import sink_counts
 from ..operators.parse import parse_events, with_host
 from ..operators.route import build_routing_dim, route
 from ..synth import synth_pages
@@ -44,9 +44,8 @@ def routed_events_observed(
     return routed, obs
 
 
-def pipeline_counts(spark: SparkSession, pages: DataFrame, salted: bool = False) -> DataFrame:
-    routed = routed_events(spark, pages)
-    return sink_counts_salted(routed) if salted else sink_counts(routed)
+def pipeline_counts(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    return sink_counts(routed_events(spark, pages))
 
 
 def pages_from_sf(spark: SparkSession, sf_dir: str, num_partitions: int | None = None) -> DataFrame:

@@ -13,9 +13,3 @@ PAGES_STRUCT = T.StructType(
         T.StructField("lang", T.StringType(), True),
     ]
 )
-
-ROUTED_COLUMNS = [
-    "url", "warc_ts", "lang", "host", "seq", "event_type", "payload",
-    "meta_lang", "text_bytes", "parse_status", "error_msg",
-    "sink_id", "route_reason", "schema_id", "hot",
-]

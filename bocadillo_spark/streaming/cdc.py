@@ -12,7 +12,9 @@ merge_upsert is a committed-batch no-op on replay — a crash between the
 merge commit and the checkpoint commit replays the epoch, which the merge
 skips. Last-writer-wins inside a batch is deterministic on (seq, …), so
 the surviving after-image per key is the max-seq one — the same answer
-the analytic oracle computes.
+the analytic oracle computes. The sink has one commit protocol
+(partition-scoped copy-on-write), and an epoch without CDC rows commits
+no table version.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.parse import parse_events, with_attrs, with_host
-from ..plans.merge import maybe_compact, merge_upsert
+from ..plans.merge import merge_upsert
 from ..sources.pages import stream_pages
 
 
@@ -61,7 +63,6 @@ def start_cdc_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
     apply_deletes: bool = False,
-    mor: bool = False,
 ) -> StreamingQuery:
     pages = stream_pages(spark, pages_path, max_files_per_trigger)
 
@@ -75,7 +76,7 @@ def start_cdc_stream(
             )
             merge_upsert(
                 batch_df.sparkSession, table_dir, rows, ["doc_id"],
-                batch_id=int(batch_id), delete_col="deleted", mor=mor,
+                batch_id=int(batch_id), delete_col="deleted",
             )
         else:
             upd = extract_update_images(batch_df).select(
@@ -83,19 +84,8 @@ def start_cdc_stream(
             )
             merge_upsert(
                 batch_df.sparkSession, table_dir, upd, ["doc_id"],
-                batch_id=int(batch_id), mor=mor,
+                batch_id=int(batch_id),
             )
-        if mor:
-            # per-commit maintenance (round-5 verdict item): a long-running
-            # MOR stream otherwise accumulates delta chains until someone
-            # runs compaction by hand. maybe_compact is a cheap metadata
-            # check that rewrites only when a bucket's chain exceeds
-            # MAX_DELTA_CHAIN; compaction commits are data-identical and
-            # epoch-independent, so replaying an epoch after a crash
-            # between compact and checkpoint stays exactly-once (the merge
-            # itself is the committed-batch no-op, and a re-run compact on
-            # an already-short chain is a no-op too).
-            maybe_compact(batch_df.sparkSession, table_dir)
 
     return (
         pages.writeStream.foreachBatch(process_batch)
@@ -112,10 +102,9 @@ def run_cdc_stream_to_completion(
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
     apply_deletes: bool = False,
-    mor: bool = False,
 ) -> None:
     q = start_cdc_stream(
         spark, pages_path, table_dir, checkpoint_dir, max_files_per_trigger,
-        apply_deletes=apply_deletes, mor=mor,
+        apply_deletes=apply_deletes,
     )
     q.awaitTermination()

@@ -80,7 +80,7 @@ SYNTH_VERSION = 2
 def host_id_of(doc_id: int) -> int:
     """Zipf-ish host skew: h000 ~40%, h001 ~20%, rest spread over 97 hosts.
 
-    The hot-host fixture for salted aggregation (FIXTURES.md §4).
+    The hot-host skew fixture (FIXTURES.md §4).
     """
     m = doc_id % 5
     if m < 2:

@@ -4,6 +4,8 @@ Iceberg-MERGE analog, /root/reference/reader/enhanced_reader.go:129-136)."""
 
 from __future__ import annotations
 
+import pytest
+
 from bocadillo_spark.plans.merge import (
     current_version,
     merge_upsert,
@@ -122,61 +124,6 @@ def test_cdc_stream_resume_exactly_once(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_streaming_mor_cdc_compacts_per_commit(spark, sf_dir, tmp_path):
-    """The MOR compaction policy runs INSIDE the streaming CDC sink
-    (round-5 verdict item 5): under N micro-batches the per-bucket delta
-    chain stays bounded by MAX_DELTA_CHAIN + 1 at every committed version
-    (a long-running stream must never accumulate unbounded chains waiting
-    for hand-run maintenance), at least one compact commit appears in the
-    table history, and the final state still equals the batch-computed
-    latest-update oracle (compaction is data-identical)."""
-    from pyspark.sql import functions as F
-
-    from bocadillo_spark.operators.parse import parse_events, with_attrs, with_host
-    from bocadillo_spark.plans.merge import (
-        MAX_DELTA_CHAIN,
-        _load_meta,
-        delta_chain_length,
-    )
-    from bocadillo_spark.streaming.cdc import run_cdc_stream_to_completion
-    from bocadillo_spark.synth import write_pages
-
-    pages_dir = write_pages(spark, sf_dir, str(tmp_path / "pages"), num_partitions=16)
-    table, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
-    run_cdc_stream_to_completion(
-        spark, pages_dir, table, ckpt, max_files_per_trigger=1, mor=True
-    )
-
-    nv = current_version(table)
-    metas = [(_load_meta(table, v) or {}) for v in range(1, nv + 1)]
-    assert "compact" in [m.get("operation") for m in metas], (
-        "stream never compacted — maintenance not wired into foreachBatch"
-    )
-    for v, m in enumerate(metas, start=1):
-        chain = delta_chain_length(m)
-        assert chain <= MAX_DELTA_CHAIN + 1, f"v{v} chain {chain} escaped policy"
-
-    got = {
-        (r["doc_id"], r["seq"], r["new_img"])
-        for r in read_table(spark, table).select("doc_id", "seq", "new_img").collect()
-    }
-    ev = with_attrs(
-        parse_events(with_host(spark.read.parquet(pages_dir)))
-    ).where(F.col("event_type") == "update")
-    want = {
-        (r["doc_id"], r["seq"], r["new_img"])
-        for r in ev.select(
-            F.col("attrs")["k1"].cast("long").alias("doc_id"),
-            F.col("seq").cast("long").alias("seq"),
-            F.col("attrs")["new"].cast("long").alias("new_img"),
-        )
-        .groupBy("doc_id")
-        .agg(F.max("seq").alias("seq"), F.max_by("new_img", "seq").alias("new_img"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_crash_between_metadata_and_pointer_replays(spark, tmp_path):
     """Metadata json lands BEFORE the pointer swap; a crash in between must
     NOT make the replayed batch look committed — it re-applies and
@@ -233,7 +180,7 @@ def test_compact_and_expire_snapshots(spark, tmp_path):
     merge_upsert(spark, t, upd, ["url"], batch_id=2)
 
     before = _rows(spark, t)
-    m = compact(spark, t, target_files=1)
+    m = compact(spark, t)
     assert m["operation"] == "compact" and m["version"] == 3
     assert _rows(spark, t) == before  # data identical
     # compaction folds every live bucket to exactly one file, owned by v3
@@ -326,26 +273,15 @@ def test_merge_upsert_delete_and_batch_dedupe(spark, tmp_path):
     assert _rows(spark, t) == [("u1", 1, "z")]
 
 
-# ---------------------------------------------------------------- MOR path
-
-
-def _dir_bytes(path, skip_meta=True):
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if skip_meta and (f.startswith("_") or f.startswith(".")):
-                continue
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def test_mor_final_state_equals_cow(spark, tmp_path):
-    """Same batch sequence (updates, inserts, hard deletes, intra-batch
-    ties) through mor=True and the COW default -> identical tables."""
-    base = [(f"u{i}", i, "a", False) for i in range(40)]
+    """Updates, inserts, hard deletes, a delete then re-insert in a later
+    batch and an intra-batch tie land in the table built by hand below.
+    (The name dates from the merge-on-read twin this test once compared
+    against; copy-on-write is now the only protocol.)"""
+    schema = "url string, doc_id long, state string, deleted boolean"
+    t = str(tmp_path / "tbl")
     batches = [
+        [(f"u{i}", i, "a", False) for i in range(40)],
         # update + insert
         [("u3", 3, "b", False), ("u40", 40, "a", False)],
         # hard delete + update of a previously-updated key
@@ -356,72 +292,24 @@ def test_mor_final_state_equals_cow(spark, tmp_path):
         # intra-batch tie on u9: dedupe keeps max struct -> "y" > "x"
         [("u9", 9, "x", False), ("u9", 9, "y", False)],
     ]
-    schema = "url string, doc_id long, state string, deleted boolean"
-    tables = {}
-    for mode, mor in (("cow", False), ("mor", True)):
-        t = str(tmp_path / mode)
-        merge_upsert(
-            spark, t, spark.createDataFrame(base, schema), ["url"],
-            batch_id=0, delete_col="deleted", mor=mor,
+    for i, b in enumerate(batches):
+        m = merge_upsert(
+            spark, t, spark.createDataFrame(b, schema), ["url"],
+            batch_id=i, delete_col="deleted",
         )
-        for i, b in enumerate(batches, start=1):
-            merge_upsert(
-                spark, t, spark.createDataFrame(b, schema), ["url"],
-                batch_id=i, delete_col="deleted", mor=mor,
-            )
-        tables[mode] = _rows(spark, t)
-    assert tables["mor"] == tables["cow"]
-    assert ("u5", 5, "a") not in dict(
-        ((r[0],) + r[1:], None) for r in tables["mor"]
-    )
-
-
-def test_mor_writes_o_batch(spark, tmp_path):
-    """A small MOR epoch touching EVERY bucket writes O(batch) bytes —
-    the property COW cannot have (it must rewrite every touched bucket)."""
-    import os
-
-    from bocadillo_spark.plans.merge import DEFAULT_BUCKETS
-
-    t = str(tmp_path / "tbl")
-    n = 20_000
-    base = spark.range(n).selectExpr(
-        "concat('u', id) AS url", "id AS doc_id",
-        "repeat('x', 64) AS state", "false AS deleted",
-    )
-    merge_upsert(spark, t, base, ["url"], batch_id=0, delete_col="deleted")
-    base_bytes = _dir_bytes(str(tmp_path / "tbl" / "snapshots" / "snap-000001"))
-
-    # one update per bucket x 4 -> every bucket touched, tiny batch
-    batch = spark.range(0, n, n // (DEFAULT_BUCKETS * 4)).selectExpr(
-        "concat('u', id) AS url", "id AS doc_id",
-        "repeat('y', 64) AS state", "false AS deleted",
-    )
-    m = merge_upsert(spark, t, batch, ["url"], batch_id=1, delete_col="deleted", mor=True)
-    assert m["operation"] == "merge-mor"
-    touched = sum(
-        1 for e in m["buckets"].values() if e.get("deltas") or e.get("deletes")
-    )
-    assert touched == DEFAULT_BUCKETS  # every bucket touched
-    epoch_bytes = _dir_bytes(str(tmp_path / "tbl" / "snapshots" / "snap-000002"))
-    assert epoch_bytes < base_bytes * 0.25, (epoch_bytes, base_bytes)
-
-    # and the read still resolves correctly
-    got = dict(
-        (r["url"], r["state"])
-        for r in read_table(spark, t).select("url", "state").collect()
-    )
-    assert len(got) == n
-    assert got["u0"] == "y" * 64 and got["u1"] == "x" * 64
+    expected = {f"u{i}": (i, "a") for i in range(42) if i != 5}
+    expected.update({"u3": (3, "c"), "u7": (7, "z"), "u9": (9, "y")})
+    want = sorted((u, d, s) for u, (d, s) in expected.items())
+    assert _rows(spark, t) == want
+    assert m["row_count"] == len(want) == 41
 
 
 def test_mor_replay_compact_and_expire(spark, tmp_path):
-    """MOR epochs are replay-idempotent; compact() folds deltas+tombstones
-    into plain COW entries; expiry keeps every version a retained manifest
-    still references (deltas and tombstones included)."""
-    import os
-
-    from bocadillo_spark.plans.merge import compact, expire_snapshots, _load_meta
+    """An epoch with an update and a hard delete is replay-idempotent;
+    compact() after it is data-identical with an exact row_count; expiry
+    down to the compacted snapshot keeps it readable. (The name dates from
+    the merge-on-read epochs this test once ran.)"""
+    from bocadillo_spark.plans.merge import compact, expire_snapshots
 
     t = str(tmp_path / "tbl")
     schema = "url string, doc_id long, state string, deleted boolean"
@@ -433,14 +321,14 @@ def test_mor_replay_compact_and_expire(spark, tmp_path):
     m1 = merge_upsert(
         spark, t,
         spark.createDataFrame([("u1", 1, "b", False), ("u2", 2, None, True)], schema),
-        ["url"], batch_id=1, delete_col="deleted", mor=True,
+        ["url"], batch_id=1, delete_col="deleted",
     )
-    assert m1["operation"] == "merge-mor" and m1["row_count"] is None
+    assert m1["row_count"] == 29
     # replay: no-op
     r = merge_upsert(
         spark, t,
         spark.createDataFrame([("u1", 1, "b", False)], schema),
-        ["url"], batch_id=1, delete_col="deleted", mor=True,
+        ["url"], batch_id=1, delete_col="deleted",
     )
     assert r.get("skipped_replay") and current_version(t) == 2
 
@@ -448,135 +336,70 @@ def test_mor_replay_compact_and_expire(spark, tmp_path):
     assert ("u1", 1, "b") in before and all(r[0] != "u2" for r in before)
 
     mc = compact(spark, t)
-    assert mc["operation"] == "compact"
-    meta = _load_meta(t, mc["version"])
-    assert all(
-        not e.get("deltas") and not e.get("deletes")
-        for e in meta["buckets"].values()
-    )
+    assert (mc["operation"], mc["version"], mc["row_count"]) == ("compact", 3, 29)
     assert _rows(spark, t) == before
-    assert mc["row_count"] == 29
 
-    # keep_last=1 retains only the compacted snapshot -> MOR log expires
-    expired = expire_snapshots(t, keep_last=1)
-    assert set(expired) <= {1, 2}
+    # keep_last=1 retains only the compacted snapshot
+    assert expire_snapshots(t, keep_last=1) == [1, 2]
     assert _rows(spark, t) == before
 
 
-def test_mor_chain_bounded_by_compaction_policy(spark, tmp_path):
-    """The compaction-policy knob (round-4 verdict #7): under N small MOR
-    merges with maybe_compact() after each commit, the longest per-bucket
-    segment chain never exceeds MAX_DELTA_CHAIN + 1 (the policy folds it
-    the commit after it crosses the knob), the table stays exact
-    throughout, and without maintenance the chain grows linearly — the
-    degradation the knob exists to cap."""
-    from bocadillo_spark.plans.merge import (
-        _load_meta,
-        delta_chain_length,
-        maybe_compact,
-    )
+def test_unsupported_manifest_rejected(spark, tmp_path):
+    """A manifest this protocol does not write — merge-on-read `deltas` /
+    `deletes` entries, or no bucket map (the flat layout) — raises on read,
+    merge and expiry instead of being read as plain buckets."""
+    import json
+    import os
+    import shutil
 
-    schema = "url string, doc_id long, state string, deleted boolean"
-    max_chain = 3  # small knob so the test exercises several fold cycles
-    expected = {}
+    from bocadillo_spark.plans.merge import expire_snapshots
 
-    t = str(tmp_path / "maintained")
-    t_raw = str(tmp_path / "unmaintained")
-    base = [(f"u{i}", i, "s0", False) for i in range(20)]
-    for tbl in (t, t_raw):
-        merge_upsert(
-            spark, tbl, spark.createDataFrame(base, schema), ["url"],
-            batch_id=0, delete_col="deleted",
-        )
-    expected.update({f"u{i}": (i, "s0") for i in range(20)})
-
-    compactions = 0
-    for i in range(1, 13):
-        batch = [(f"u{i % 20}", i % 20, f"s{i}", False)]
-        expected[f"u{i % 20}"] = (i % 20, f"s{i}")
-        for tbl in (t, t_raw):
-            m = merge_upsert(
-                spark, tbl, spark.createDataFrame(batch, schema), ["url"],
-                batch_id=i, delete_col="deleted", mor=True,
-            )
-            assert m["operation"] == "merge-mor"
-        mc = maybe_compact(spark, t, max_chain=max_chain)
-        compactions += mc is not None
-        chain = delta_chain_length(_load_meta(t, current_version(t)))
-        assert chain <= max_chain + 1, f"chain {chain} escaped the policy"
-        assert _rows(spark, t) == sorted(
-            (u, d, s) for u, (d, s) in expected.items()
-        )
-    assert compactions >= 2  # the policy actually cycled, not a one-off
-    # without maintenance the chain is linear in commits: the read
-    # amplification MAX_DELTA_CHAIN bounds
-    raw_chain = delta_chain_length(_load_meta(t_raw, current_version(t_raw)))
-    assert raw_chain > max_chain + 1
-
-
-def test_cow_over_carried_mor_row_count_none_until_compact(spark, tmp_path):
-    """A COW merge over a table still carrying MOR deltas/tombstones in
-    untouched buckets must record row_count=None (base-only sums
-    misreport live rows — the round-4 advice); compact() restores the
-    exact count."""
-    from bocadillo_spark.plans.merge import _load_meta, compact
-
-    schema = "url string, doc_id long, state string, deleted boolean"
     t = str(tmp_path / "tbl")
-    merge_upsert(
-        spark, t,
-        spark.createDataFrame(
-            [(f"u{i}", i, "a", False) for i in range(40)], schema
-        ),
-        ["url"], batch_id=0, delete_col="deleted",
+    base = spark.createDataFrame(
+        [(f"u{i}", i, "a") for i in range(20)], "url string, doc_id long, state string"
     )
-    # MOR epoch: one delta row + one tombstone, somewhere in the buckets
-    merge_upsert(
-        spark, t,
-        spark.createDataFrame(
-            [("u1", 1, "b", False), ("u2", 2, None, True)], schema
-        ),
-        ["url"], batch_id=1, delete_col="deleted", mor=True,
-    )
-    # COW epoch touching a DIFFERENT key: carried entries still hold MOR
-    # state -> live count is unknowable from bucket 'rows' sums
-    m = merge_upsert(
-        spark, t,
-        spark.createDataFrame([("u39", 39, "z", False)], schema),
-        ["url"], batch_id=2, delete_col="deleted",
-    )
-    assert m["operation"] != "merge-mor"  # the COW path
-    assert m["row_count"] is None
-    carried = _load_meta(t, m["version"])["buckets"]
-    assert any(e.get("deltas") or e.get("deletes") for e in carried.values())
-    # the data itself is exact all along (40 base - 1 tombstone = 39 live;
-    # u1/u39 were updates); compact restores the exact count
-    rows = _rows(spark, t)
-    assert len(rows) == 39 and ("u1", 1, "b") in rows and ("u39", 39, "z") in rows
-    mc = compact(spark, t)
-    assert mc["row_count"] == 39
+    merge_upsert(spark, t, base, ["url"], batch_id=1)
+    meta_dir = os.path.join(t, "_snapshots")
+    with open(os.path.join(meta_dir, "v000001.json")) as f:
+        v1 = json.load(f)
+
+    def commit_by_hand(meta):
+        with open(os.path.join(meta_dir, f"v{meta['version']:06d}.json"), "w") as f:
+            json.dump(meta, f)
+        with open(os.path.join(t, "_latest"), "w") as f:
+            f.write(str(meta["version"]))
+
+    # every path the manifest names exists, so reading it as plain
+    # buckets would succeed (with duplicated rows)
+    mor = dict(v1, version=2, parent=1, batch_id=2)
+    k, e = sorted(v1["buckets"].items())[0]
+    mor["buckets"] = dict(v1["buckets"])
+    mor["buckets"][k] = dict(e, deltas=[{"version": 1, "rows": e["rows"]}])
+    commit_by_hand(mor)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        read_table(spark, t)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        expire_snapshots(t, keep_last=1)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        merge_upsert(spark, t, base.limit(1), ["url"], batch_id=3)
+
+    flat = {k2: v for k2, v in v1.items() if k2 != "buckets"}
+    flat.update(version=3, parent=2, batch_id=3)
+    snaps = os.path.join(t, "snapshots")
+    shutil.copytree(f"{snaps}/snap-000001", f"{snaps}/snap-000003")
+    commit_by_hand(flat)
+    with pytest.raises(ValueError, match="bucket manifest"):
+        read_table(spark, t)
+    with pytest.raises(ValueError, match="bucket manifest"):
+        expire_snapshots(t, keep_last=1)
 
 
 # ---------------------------------------------------------------------------
-# Round-6 review findings, pinned as xfail until the round-7 fix window
-# (REVIEW_r06.md: the affected registry queries are r05-green and outside
-# the full round-6 grading window; the regrade-on-change convention defers
-# the implementation fixes to round 7, where those regrades are already
-# scheduled). Each test asserts the CORRECT behavior and is expected to
-# fail today; flipping one to pass without removing the marker makes the
-# fix visible in the suite (xpass is reported).
+# Contracts on NULL keys, key validation, empty batches and the registry
+# query's workspace.
 # ---------------------------------------------------------------------------
 
-import pytest
 
-
-@pytest.mark.xfail(
-    reason="REVIEW_r06 #2: NULL merge keys — left_anti never matches "
-    "NULL==NULL, so a null-key row is re-inserted every merge instead of "
-    "replaced (content idempotence broken). Fix: eqNullSafe join or "
-    "reject null keys. Round-7.",
-    strict=False,
-)
 def test_null_key_merge_idempotent(spark, tmp_path):
     t = str(tmp_path / "tbl_nullkey")
     base = spark.createDataFrame(
@@ -587,16 +410,9 @@ def test_null_key_merge_idempotent(spark, tmp_path):
     # re-merging identical content must produce an identical table
     merge_upsert(spark, t, base, ["url"], batch_id=2)
     rows = read_table(spark, t).collect()
-    assert len(rows) == 2, f"null-key row duplicated: {sorted(map(tuple, rows))}"
+    assert len(rows) == 2, f"null-key row duplicated: {sorted(map(repr, rows))}"
 
 
-@pytest.mark.xfail(
-    reason="REVIEW_r06 #4: merge_upsert trusts the caller's key_cols "
-    "instead of validating against the manifest's recorded key — a "
-    "mismatched key silently mis-buckets and leaves replaced rows alive. "
-    "Fix: raise on mismatch. Round-7.",
-    strict=False,
-)
 def test_key_mismatch_rejected(spark, tmp_path):
     t = str(tmp_path / "tbl_keymismatch")
     base = spark.createDataFrame(
@@ -611,13 +427,6 @@ def test_key_mismatch_rejected(spark, tmp_path):
         merge_upsert(spark, t, upd, ["url", "doc_id"], batch_id=2)
 
 
-@pytest.mark.xfail(
-    reason="REVIEW_r06 #8: an update batch that is empty after filtering "
-    "still consumes a table version on a non-empty table (pure "
-    "metadata churn per empty epoch for a long-running CDC stream). "
-    "Fix: early no-op return. Round-7.",
-    strict=False,
-)
 def test_empty_batch_no_version_churn(spark, tmp_path):
     t = str(tmp_path / "tbl_emptybatch")
     base = spark.createDataFrame(
@@ -630,15 +439,6 @@ def test_empty_batch_no_version_churn(spark, tmp_path):
     assert current_version(t) == v1, "empty batch consumed a version"
 
 
-@pytest.mark.xfail(
-    reason="REVIEW_r06 fourth pass #5: q_merge_upsert_state mkdtemps a "
-    "fresh workspace and rewrites the full MERGE table on every registry "
-    "invocation — unbounded /tmp growth across grading/bench runs, unlike "
-    "the fingerprint-tagged GC'd _stream_workspace pattern. Fix staged "
-    "for the r07 window (merge_upsert_state is r05-green, outside the "
-    "full r06 window).",
-    strict=False,
-)
 def test_merge_query_workspace_reused(spark):
     import glob
 
