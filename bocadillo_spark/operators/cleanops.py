@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .textops import _words_col
+from .textops import _word_ids_col, _words_col
 
 # C4-style dedup granularity: non-overlapping word chunks (the synthetic
 # corpus has no sentence boundaries, so a fixed token window stands in for
@@ -38,10 +38,6 @@ PHONE_RE = r"\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
 
 # mT5/XLM-R style sampling temperature: p_l ∝ (n_l/N)^ALPHA.
 SAMPLE_ALPHA = 0.3
-# Pooled out-of-vocabulary bucket for unigram_logprob's bounded-vocab mode.
-# "\x00OOV" cannot collide with a real token (tokenizer splits on spaces and
-# source text is printable), so the union row never shadows a corpus word.
-OOV_TOKEN = "\x00OOV"
 
 
 def _md5_utf8(col):
@@ -217,24 +213,18 @@ SELECT doc_id,
 FROM p"""
 
 
-def unigram_logprob(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """CCNet-style LM quality proxy: score each document by the mean
     unigram log-probability of its tokens under the corpus's own unigram
     model (two-pass: vocabulary counts, then score). Low scorers are
-    boilerplate/garbage candidates.
+    boilerplate/garbage candidates. NULL/empty contract: a document with
+    no tokens (empty or NULL text) yields no row; every other document
+    yields one row with n_tokens = its token count.
 
     Scale shape: pass 1 is one map-side-combined groupBy(word); pass 2 is
     a map-side broadcast join of the exploded corpus against the vocab
     plus one groupBy(doc_id). The corpus is never shuffled on the word
-    key. `max_vocab` bounds the broadcast for a 100-TB corpus: the
-    vocabulary is truncated to the top-V words by count (deterministic
-    word tiebreak) and every remaining word scores through a single
-    pooled OOV bucket — so the broadcast side is ≤ V+1 rows no matter how
-    large the corpus, and the model stays a proper distribution (counts
-    still sum to the corpus total). max_vocab=None keeps the exact
-    untruncated model (what the DuckDB oracle computes); in that mode the
-    broadcast is a HINT ONLY on a Zipf-bounded side, and callers with
-    unbounded vocabularies should pass max_vocab.
+    key; the broadcast is a HINT ONLY on a Zipf-bounded side.
 
     Deliberately NOT persisted (measured r07): the vocab subtree appears
     under several consumers, but Spark's exchange reuse already shares
@@ -243,48 +233,13 @@ def unigram_logprob(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     0.65 s plain at sf0.1. Only the pre-exchange map work (scan+explode)
     re-runs per copy, and that is cheaper than cache materialization.
 
-    In the unbounded mode words flow as xxhash64 identities (the
-    _word_ngram_hashes rationale: model counts and the scoring join need
-    only word EQUALITY, so vocab/broadcast/shuffle rows carry int64 keys;
-    scores identical modulo the repo-wide 2^-64 collision class). The
-    max_vocab mode keeps word strings — its top-V truncation tiebreak is
-    defined on (count desc, word asc) and is pinned by the bounded-vocab
-    DuckDB parity test."""
-    tokens = (
-        _words_col()
-        if max_vocab is not None
-        else F.transform(_words_col(), lambda w: F.xxhash64(w))
-    )
-    wexp = docs.select("doc_id", F.explode(tokens).alias("word"))
+    Words flow as textops._word_ids_col identities, so vocab, broadcast
+    and shuffle rows carry int64 keys; scores are identical modulo the
+    repo-wide 2^-64 collision class."""
+    wexp = docs.select("doc_id", F.explode(_word_ids_col()).alias("word"))
     vocab = wexp.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    if max_vocab is not None:
-        # Top-V by (count desc, word asc) via a two-pass global top-k
-        # (rank over a single partition would serialize; top-k of V rows
-        # per partition then global take is the scalable shape).
-        topv = (
-            vocab.orderBy(F.desc("c"), F.asc("word"))
-            .limit(int(max_vocab))
-            .withColumn("oov", F.lit(False))
-        )
-        oov_pool = (
-            vocab.join(topv.select("word"), "word", "left_anti")
-            .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("c"))
-            .select(F.lit(OOV_TOKEN).alias("word"), "c", F.lit(True).alias("oov"))
-        )
-        vocab = topv.unionByName(oov_pool)
     total = vocab.agg(F.sum("c").alias("total"))
-    if max_vocab is not None:
-        # Left join against the bounded vocab; misses score via the OOV row.
-        oov_c = vocab.filter(F.col("oov")).select(F.col("c").alias("oov_c"))
-        scored = (
-            wexp.join(F.broadcast(vocab.filter(~F.col("oov")).select("word", "c")),
-                      "word", "left")
-            .crossJoin(F.broadcast(oov_c))
-            .withColumn("c", F.coalesce(F.col("c"), F.col("oov_c")))
-            .crossJoin(F.broadcast(total))
-        )
-    else:
-        scored = wexp.join(F.broadcast(vocab), "word").crossJoin(F.broadcast(total))
+    scored = wexp.join(F.broadcast(vocab), "word").crossJoin(F.broadcast(total))
     return (
         scored.groupBy("doc_id")
         .agg(
@@ -312,7 +267,7 @@ DSIR_TARGET_LANG = "en"
 DSIR_HASH_A, DSIR_HASH_C, DSIR_HASH_M = 2_654_435_761, 7, 1_000_003
 
 
-def importance_resample(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
+def importance_resample(docs: DataFrame) -> DataFrame:
     """DSIR-style importance resampling (Xie et al. 2023, by shape): score
     each document by the mean per-token log importance ratio between a
     TARGET unigram model (the DSIR_TARGET_LANG slice, add-one smoothed)
@@ -328,25 +283,14 @@ def importance_resample(docs: DataFrame, max_vocab: int | None = None) -> DataFr
     int/int and round-6 recipes proven across the registry. exp() never
     runs: accept-in-log-space is the same event.
 
-    Scale shape: two map-side-combined groupBy(word) model passes (the
-    target pass is a filtered twin), models broadcast (production bounds
-    them via unigram_logprob-style max_vocab/top-V), corpus joined
-    map-side and aggregated once per doc_id — the corpus is never
-    shuffled on the word key, same plan family as unigram_logprob. The
-    per-word expression subtracts two logs instead of ln of one fused
-    ratio, so no BIGINT product can overflow at 100-TB token counts.
-    `max_vocab` bounds the broadcast exactly as unigram_logprob's: both
-    models truncate to the top-V words by corpus count (deterministic
-    tiebreak) with ONE pooled OOV bucket carrying the leftover mass of
-    each model; smoothing constants (n_all, n_tgt, V) stay computed over
-    the full vocabulary. The bounded path is an APPROXIMATION of the
-    exact model, not a proper distribution: add-one smoothing is applied
-    once to the pooled OOV bucket while the denominator keeps
-    full-vocabulary V (target mass sums slightly under 1), and each OOV
-    token is scored with the pooled — hence inflated — count. Acceptable
-    for a sampling gate at scale; the graded query runs max_vocab=None,
-    the exact model."""
-    kept = dsir_doc_scores(docs, max_vocab=max_vocab)
+    Scale shape: ONE map-side-combined groupBy(word) builds both models
+    (c_all = count, c_tgt = count_if over the target slice), the
+    vocabulary is broadcast, and the corpus is joined map-side and
+    aggregated once per doc_id — the corpus is never shuffled on the
+    word key, same plan family as unigram_logprob. The per-word
+    expression subtracts two logs instead of ln of one fused ratio, so
+    no BIGINT product can overflow at 100-TB token counts."""
+    kept = dsir_doc_scores(docs)
     return kept.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.when(F.col("sampled"), 1).otherwise(0)).cast("long").alias("n_sampled"),
@@ -356,13 +300,22 @@ def importance_resample(docs: DataFrame, max_vocab: int | None = None) -> DataFr
     )
 
 
-def dsir_doc_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
+def dsir_doc_scores(docs: DataFrame) -> DataFrame:
     """Per-document DSIR scores and accept decisions: (doc_id, lang,
     n_tokens, score, sampled). The whole importance_resample computation
     minus its final per-lang rollup — extracted so compositions (the
     curation pipeline) can keep the SAMPLED DOCUMENTS rather than the
     summary; importance_resample wraps this with an identical plan. See
     its docstring for the model, exactness, and scale-shape contract.
+    NULL/empty contract: a document with no tokens (empty or NULL text)
+    yields no row; every other document yields one row with n_tokens =
+    its token count.
+
+    Both models come from one aggregate: count_if gives a word absent
+    from the target slice c_tgt = 0, exactly what the oracle's LEFT JOIN
+    + coalesce(c_tgt, 0) gives, so the vocabulary (and V, its distinct
+    count) is the oracle's, modulo the 2^-64 collision class of the
+    textops._word_ids_col word keys.
 
     Deliberately NOT persisted (measured r07, same verdict as
     unigram_logprob): the vocab subtree appears under several consumers,
@@ -372,27 +325,11 @@ def dsir_doc_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     at sf0.1 (importance_resample ~1.05 s plain vs ~1.25 s with the
     vocab persisted; curation_pipeline ~3.45 s vs ~3.65 s). Only the
     pre-exchange map work re-runs per copy, and that is cheaper than
-    cache materialization.
-
-    In the unbounded mode words flow as xxhash64 identities (the
-    unigram_logprob rationale — both models and the scoring join need
-    only word equality; V, the count of distinct identities, is
-    unchanged modulo the 2^-64 collision class). The max_vocab mode
-    keeps word strings for its pinned (count desc, word asc) tiebreak."""
-    tokens = (
-        _words_col()
-        if max_vocab is not None
-        else F.transform(_words_col(), lambda w: F.xxhash64(w))
-    )
-    wexp = docs.select("doc_id", "lang", F.explode(tokens).alias("word"))
-    call = wexp.groupBy("word").agg(F.count(F.lit(1)).alias("c_all"))
-    ctgt = (
-        wexp.where(F.col("lang") == DSIR_TARGET_LANG)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c_tgt"))
-    )
-    vocab = call.join(ctgt, "word", "left").select(
-        "word", "c_all", F.coalesce("c_tgt", F.lit(0)).alias("c_tgt")
+    cache materialization."""
+    wexp = docs.select("doc_id", "lang", F.explode(_word_ids_col()).alias("word"))
+    vocab = wexp.groupBy("word").agg(
+        F.count(F.lit(1)).alias("c_all"),
+        F.count_if(F.col("lang") == DSIR_TARGET_LANG).alias("c_tgt"),
     )
     consts = vocab.agg(
         F.sum("c_all").alias("n_all"),
@@ -402,24 +339,7 @@ def dsir_doc_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     ratio = F.log(
         (F.col("c_tgt") + 1).cast("double") / (F.col("n_tgt") + F.col("v"))
     ) - F.log(F.col("c_all").cast("double") / F.col("n_all"))
-    if max_vocab is not None:
-        topv = vocab.orderBy(F.desc("c_all"), F.asc("word")).limit(int(max_vocab))
-        oov = (
-            vocab.join(topv.select("word"), "word", "left_anti")
-            .agg(
-                F.coalesce(F.sum("c_all"), F.lit(0)).alias("oov_all"),
-                F.coalesce(F.sum("c_tgt"), F.lit(0)).alias("oov_tgt"),
-            )
-        )
-        scored = (
-            wexp.join(F.broadcast(topv), "word", "left")
-            .crossJoin(F.broadcast(oov))
-            .withColumn("c_all", F.coalesce(F.col("c_all"), F.col("oov_all")))
-            .withColumn("c_tgt", F.coalesce(F.col("c_tgt"), F.col("oov_tgt")))
-            .crossJoin(F.broadcast(consts))
-        )
-    else:
-        scored = wexp.join(F.broadcast(vocab), "word").crossJoin(F.broadcast(consts))
+    scored = wexp.join(F.broadcast(vocab), "word").crossJoin(F.broadcast(consts))
     per_doc = (
         scored.groupBy("doc_id", "lang")
         .agg(
@@ -635,14 +555,12 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     word scores ~0). Two-level groupBy: (doc, word) counts then per-doc
     -sum(p ln p); both shuffles are map-side combined and keyed by
     doc_id, so the corpus is never globally mixed. Words flow as
-    xxhash64 identities (textops._word_ngram_hashes rationale): the
-    (doc, word) counts need only word EQUALITY, so the shuffle carries
-    int64 keys instead of strings; counts — hence the entropy — are
-    identical modulo the repo-wide 2^-64 collision class."""
-    wexp = docs.select(
-        "doc_id",
-        F.explode(F.transform(_words_col(), lambda w: F.xxhash64(w))).alias("word"),
-    )
+    textops._word_ids_col identities, so the (doc, word) shuffle carries
+    int64 keys; counts — hence the entropy — are identical modulo the
+    repo-wide 2^-64 collision class. NULL/empty contract: a document with
+    no tokens (empty or NULL text) yields no row; every other document
+    yields one row with n_tokens = its token count."""
+    wexp = docs.select("doc_id", F.explode(_word_ids_col()).alias("word"))
     wc = wexp.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
     totals = wc.groupBy("doc_id").agg(F.sum("c").alias("n"))
     p = F.col("c").cast("double") / F.col("n")
@@ -856,24 +774,25 @@ def exact_substring_dedup(docs: DataFrame, k: int = EXSUB_K) -> DataFrame:
 # ---- interpolated bigram LM scoring (KenLM-direction quality proxy) ---------
 # One step up the CCNet ladder from unigram_logprob: score each document
 # by the mean log-probability of its tokens under an INTERPOLATED bigram
-# model fit on the corpus itself — P(w_i) = lam * P_mle(w_i | w_{i-1}) +
-# (1 - lam) * P_uni(w_i), with the first token of a document scoring
-# unigram-only (no cross-document context; the interpolation term also
-# absorbs unseen bigrams, so every token has positive probability without
-# discounting machinery). CCNet proper uses a 5-gram KenLM; the
+# model fit on the corpus itself — P(w_i) = BIGRAM_LAMBDA * P_mle(w_i |
+# w_{i-1}) + (1 - BIGRAM_LAMBDA) * P_uni(w_i), with the first token of a
+# document scoring unigram-only (no cross-document context; the
+# interpolation term also absorbs unseen bigrams, so every token has
+# positive probability without discounting machinery). CCNet proper uses
+# a 5-gram KenLM; the
 # interpolation-with-backoff-to-unigram shape is the same family at the
 # order this corpus supports.
 #
 # Scale shape (unigram_logprob's, plus one more model pass): the bigram
 # model is ONE map-side-combined groupBy(prev, word); the prev column is
-# built NATIVELY by zipping the word array with its shifted self
+# built NATIVELY by zipping the word-id array with its shifted self
 # (arrays_zip over slice — no per-doc window, no second shuffle of the
 # corpus); scoring is map-side broadcast joins (unigram twice — once for
 # the numerator, once for the prev-denominator — and bigram once) plus
-# one groupBy(doc_id). The corpus is never shuffled on a word key.
-# Production bounds the broadcasts via unigram_logprob-style max_vocab
-# top-V truncation; this scorer keeps the exact model (the pytest
-# contract and the DuckDB twin both compute it exactly).
+# one groupBy(doc_id). The corpus is never shuffled on a word key, and
+# prev and word are textops._word_ids_col identities, so the bigram
+# shuffle and every broadcast carry int64 keys (scores identical modulo
+# the repo-wide 2^-64 collision class).
 
 BIGRAM_LAMBDA = 0.7  # shared with the SQL twin; 7/10 exact in binary? no —
 # but both engines compute 0.7 * x + 0.3 * y on float64 from the same
@@ -882,24 +801,26 @@ BIGRAM_LAMBDA = 0.7  # shared with the SQL twin; 7/10 exact in binary? no —
 
 
 def _pair_col():
-    """(prev, word) structs per document: word array zipped with its
-    1-shifted self; the first token pairs with NULL (scores unigram-only).
-    Token-free docs (empty/NULL text) yield an empty array — guarded
-    explicitly because slice() rejects the n-1 = -1 length they'd
-    otherwise produce, and arrays_zip would pad a bogus (NULL, NULL)
-    token row."""
-    ws = _words_col()
+    """(prev, word) word-id structs per document: word-id array zipped
+    with its 1-shifted self; the first token pairs with NULL (scores
+    unigram-only). Token-free docs (empty/NULL text) yield an empty
+    array — guarded explicitly because slice() rejects the n-1 = -1
+    length they'd otherwise produce, and arrays_zip would pad a bogus
+    (NULL, NULL) token row."""
+    ws = _word_ids_col()
     n = F.size(ws)
-    prev = F.concat(F.array(F.lit(None).cast("string")), F.slice(ws, 1, n - 1))
+    prev = F.concat(F.array(F.lit(None).cast("bigint")), F.slice(ws, 1, n - 1))
     return F.when(n > 0, F.arrays_zip(prev.alias("prev"), ws.alias("word"))).otherwise(
-        F.array().cast("array<struct<prev:string,word:string>>")
+        F.array().cast("array<struct<prev:bigint,word:bigint>>")
     )
 
 
-def bigram_logprob(docs: DataFrame, lam: float = BIGRAM_LAMBDA) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, n_tokens, avg_logprob) under the
-    corpus-fit interpolated bigram model. Rows with no tokens are absent
-    (same convention as unigram_logprob)."""
+    corpus-fit interpolated bigram model. NULL/empty contract: a document
+    with no tokens (empty or NULL text) yields no row; every other
+    document yields one row with n_tokens = its token count (same
+    convention as unigram_logprob)."""
     from ..operators.dedup import persist_evicting
 
     # persisted: the exploded pair frame feeds FIVE consumers — the
@@ -935,14 +856,14 @@ def bigram_logprob(docs: DataFrame, lam: float = BIGRAM_LAMBDA) -> DataFrame:
     p_big = F.coalesce(F.col("cb"), F.lit(0)) / F.col("c_prev")
     p = F.when(
         F.col("prev").isNull(), p_uni
-    ).otherwise(F.lit(lam) * p_big + F.lit(1.0 - lam) * p_uni)
+    ).otherwise(F.lit(BIGRAM_LAMBDA) * p_big + F.lit(1.0 - BIGRAM_LAMBDA) * p_uni)
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.round(F.avg(F.log(p)), 6).alias("avg_logprob"),
     )
 
 
-def bigram_oracle_sql(table: str = "documents", lam: float = BIGRAM_LAMBDA) -> str:
+def bigram_oracle_sql(table: str = "documents") -> str:
     """DuckDB twin of bigram_logprob (same tokenization, same model, same
     interpolation) — the graded oracle behind the bigram_logprob registry
     entry (round 6)."""
@@ -960,8 +881,8 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
        round(avg(ln(
          CASE WHEN w.prev IS NULL
               THEN CAST(v.cu AS DOUBLE) / CAST(t.total AS DOUBLE)
-              ELSE {lam} * (CAST(coalesce(vb.cb, 0) AS DOUBLE) / CAST(vp.cu AS DOUBLE))
-                   + {1.0 - lam} * (CAST(v.cu AS DOUBLE) / CAST(t.total AS DOUBLE))
+              ELSE {BIGRAM_LAMBDA} * (CAST(coalesce(vb.cb, 0) AS DOUBLE) / CAST(vp.cu AS DOUBLE))
+                   + {1.0 - BIGRAM_LAMBDA} * (CAST(v.cu AS DOUBLE) / CAST(t.total AS DOUBLE))
          END)), 6) AS avg_logprob
 FROM w
 JOIN v USING (word)

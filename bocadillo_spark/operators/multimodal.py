@@ -204,10 +204,13 @@ FROM ch"""
 
 
 def media_metadata(df: DataFrame, payload_col: str = "html", media_type: str = "text/html") -> DataFrame:
-    """Typed metadata projection over a binary column — native only."""
+    """Typed metadata projection over a binary column — native only. A
+    NULL payload counts as empty: n_bytes 0, is_valid False (never NULL,
+    so a 'WHERE NOT is_valid' filter keeps it)."""
+    n_bytes = F.coalesce(F.length(F.col(payload_col)), F.lit(0))
     return df.select(
         "url",
         F.lit(media_type).alias("media_type"),
-        F.coalesce(F.length(F.col(payload_col)), F.lit(0)).cast("long").alias("n_bytes"),
-        (F.length(F.col(payload_col)) > 0).alias("is_valid"),
+        n_bytes.cast("long").alias("n_bytes"),
+        (n_bytes > 0).alias("is_valid"),
     )

@@ -476,15 +476,13 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_centroids(e: DataFrame, n_clusters: int = 20, seed: int = 7) -> DataFrame | None:
+def kmeans_centroids(e: DataFrame, n_clusters: int = 20, seed: int = 7) -> DataFrame:
     """Seed-pinned k-means coarse quantizer (pyspark.ml) — the trained-IVF
-    centroid set. Returns None when pyspark.ml is unavailable (callers fall
-    back to stride sampling). Deterministic: fixed seed + fixed input."""
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-    except ImportError:
-        return None
+    centroid set (centroid_id, ce). Deterministic: fixed seed + fixed
+    input."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
     feat = e.select("vec_id", array_to_vector(F.col("e")).alias("features"))
     model = KMeans(k=n_clusters, seed=seed, maxIter=8).fit(feat)
     spark = e.sparkSession
@@ -502,15 +500,16 @@ def ivf_topk(
     centroid_mod: int = 25,
     train: bool = True,
 ) -> DataFrame:
-    """IVF ANN: coarse centroids (seed-pinned k-means when pyspark.ml is
-    present — the real IVF training step; every-`centroid_mod`-th vector as
-    the dependency-free fallback), queries probe their `nprobe` nearest
-    lists, exact cosine within the probed lists."""
+    """IVF ANN: coarse centroids (seed-pinned k-means with `train` — the
+    real IVF training step; every-`centroid_mod`-th vector without it, the
+    quantizer the ann_ivf_topk registry entry grades), queries probe their
+    `nprobe` nearest lists, exact cosine within the probed lists."""
     e = emb.select(
         "vec_id", _as_double(F.col("embedding")).alias("e")
     )
-    centroids = kmeans_centroids(e) if train else None
-    if centroids is None:
+    if train:
+        centroids = kmeans_centroids(e)
+    else:
         centroids = e.where(F.col("vec_id") % centroid_mod == 0).select(
             F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
         )
@@ -565,10 +564,6 @@ def write_ivf_index(
     e = emb.select("vec_id", _as_double(F.col("embedding")).alias("e"))
     train = e.sample(train_fraction, seed=seed) if train_fraction < 1.0 else e
     centroids = kmeans_centroids(train, n_clusters=n_lists, seed=seed)
-    if centroids is None:  # pyspark.ml unavailable: stride fallback
-        centroids = e.where(F.col("vec_id") % 25 == 0).select(
-            F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
-        )
     assigned = ivf_assign(e, centroids)
     assigned.select("vec_id", "e", "list_id").write.mode("overwrite").partitionBy(
         "list_id"
@@ -726,10 +721,6 @@ def semantic_dedup(
             vecs.sample(train_fraction, seed=7) if train_fraction < 1.0 else vecs
         )
         centroids = kmeans_centroids(train, n_clusters=n_clusters)
-    if centroids is None:  # pyspark.ml unavailable: stride fallback
-        centroids = vecs.where(F.col("vec_id") % 25 == 0).select(
-            F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
-        )
     assigned = ivf_assign(vecs, centroids)
 
     # centroid matrix into the worker closure: n_clusters rows,

@@ -200,6 +200,17 @@ def _words_col():
     )
 
 
+def _word_ids_col():
+    """array<bigint> of word identities: xxhash64 of each _words_col()
+    token. THE word key of every word-count model (unigram, DSIR,
+    entropy, bigram): their counts and joins need only word EQUALITY, so
+    shuffles and broadcasts carry int64 keys instead of strings. Equal
+    words always collide; two DISTINCT words collide w.p. ~2^-64 (the
+    _word_ngram_hashes contract class), so counts are exact modulo that
+    class. Empty/NULL text yields []."""
+    return F.transform(_words_col(), lambda w: F.xxhash64(w))
+
+
 def repetition_scores(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals, per document:
     top_bigram_frac (occurrences of the most common word bigram / total

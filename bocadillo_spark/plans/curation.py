@@ -18,11 +18,11 @@ discipline:
   3. decontamination: eval 8-gram set (tiny vs the corpus) broadcast
      against the train side — the corpus is never shuffled on the gram
      key; the contaminated-id set joins back LEFT ANTI;
-  4. DSIR resampling: two map-side-combined word-model passes over the
-     SURVIVORS (models fit on what remains — resampling the corpus being
-     exported, not the raw crawl), models broadcast, one per-doc
-     aggregate, deterministic integer-hash accept gate (rerunnable,
-     backfill-stable);
+  4. DSIR resampling: one map-side-combined vocabulary aggregate over
+     the SURVIVORS carrying both word models (models fit on what remains
+     — resampling the corpus being exported, not the raw crawl), the
+     vocabulary broadcast, one per-doc aggregate, deterministic
+     integer-hash accept gate (rerunnable, backfill-stable);
   5. export: pass 1 = one scalar token sum, pass 2 = shard-hash
      partitioned write. No global sort, no driver loop, no collect.
 
@@ -103,7 +103,7 @@ def curate_corpus(docs: DataFrame) -> DataFrame:
     )
     # 3) decontaminate: drop gated docs sharing any eval 8-gram
     contaminated = decontaminate(docs).select("doc_id")
-    # persisted: the survivor frame feeds the two DSIR model passes, the
+    # persisted: the survivor frame feeds the DSIR vocabulary pass, the
     # per-doc scoring pass, AND the final join (plus the export's
     # token-sum + write actions downstream) — without persistence the
     # whole upstream (md5-dedup shuffle, quality gate, 8-gram

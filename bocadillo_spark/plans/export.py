@@ -61,12 +61,16 @@ def write_training_shards(
 def read_shard_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-shard stats FROM THE WRITTEN ARTIFACT (not the plan that made
     it) — what the export grading and a pre-training sanity check read."""
-    if not glob.glob(os.path.join(glob.escape(out_dir), "shard=*")):
+    shard_dirs = sorted(glob.glob(os.path.join(glob.escape(out_dir), "shard=*")))
+    if not shard_dirs:
         # a zero-row export writes no shard=* directory
         return spark.createDataFrame([], "shard long, n_docs long, shard_tokens long")
+    # the directory list, not the glob: Spark probes a single glob path
+    # for a streaming-sink metadata log and logs a FileNotFoundException
+    # WARN on every read
     df = spark.read.schema(
         "doc_id bigint, lang string, text string, n_tokens bigint"
-    ).option("basePath", out_dir).json(f"{out_dir}/shard=*")
+    ).option("basePath", out_dir).json(shard_dirs)
     return df.groupBy(F.col("shard").cast("long").alias("shard")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("shard_tokens"),

@@ -2987,7 +2987,8 @@ from .operators.similarity import semantic_oracle_sql  # noqa: E402
 def q_bigram_logprob(spark, sf_dir):
     """Interpolated bigram-LM quality scoring (CCNet direction, one order
     up from unigram_logprob): per-doc mean log P(w_i) under
-    lam*P_mle(w_i|w_{i-1}) + (1-lam)*P_uni(w_i), first token unigram-only.
+    L*P_mle(w_i|w_{i-1}) + (1-L)*P_uni(w_i) with L = BIGRAM_LAMBDA, first
+    token unigram-only.
     The DuckDB twin shares tokenization, model, lambda, and the repo-wide
     round-6 contract (cleanops.bigram_logprob / bigram_oracle_sql —
     pre-verified 500/500 row-identical before this graded slot)."""

@@ -1,7 +1,8 @@
 """Interpolated bigram LM scoring (cleanops.py::bigram_logprob).
 
 Contract: per-doc mean log-probability under the corpus-fit model
-P = lam * P_mle(w|prev) + (1-lam) * P_uni(w), first token unigram-only.
+P = L * P_mle(w|prev) + (1-L) * P_uni(w) with L = BIGRAM_LAMBDA, first
+token unigram-only.
 Verified three ways: exact-value equality vs a pure-Python reference,
 round-6 equality vs the DuckDB twin (the shape a graded slot would use),
 and the ordering property the scorer exists for (a repetitive
@@ -37,7 +38,7 @@ def _fixture_texts():
     }
 
 
-def _reference(texts, lam):
+def _reference(texts):
     toks = {d: [w for w in t.split(" ") if w != ""] for d, t in texts.items()}
     uni = Counter(w for ws in toks.values() for w in ws)
     big = Counter(
@@ -52,7 +53,10 @@ def _reference(texts, lam):
             if i == 0:
                 p = pu
             else:
-                p = lam * (big.get((ws[i - 1], w), 0) / uni[ws[i - 1]]) + (1 - lam) * pu
+                p = (
+                    BIGRAM_LAMBDA * (big.get((ws[i - 1], w), 0) / uni[ws[i - 1]])
+                    + (1 - BIGRAM_LAMBDA) * pu
+                )
             lps.append(math.log(p))
         out[d] = (len(ws), round(sum(lps) / len(lps), 6))
     return out
@@ -72,7 +76,7 @@ def test_matches_python_reference_exactly(spark, fixture_df):
         r["doc_id"]: (r["n_tokens"], r["avg_logprob"])
         for r in bigram_logprob(df).collect()
     }
-    ref = _reference(texts, BIGRAM_LAMBDA)
+    ref = _reference(texts)
     assert set(got) == set(ref)
     for d in ref:
         assert got[d][0] == ref[d][0]

@@ -85,36 +85,3 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     mism = [i for i, (a, b) in enumerate(zip(s, d)) if a != b][:5]
     assert s == d, f"{name}: first value mismatches at {[(i, s[i], d[i]) for i in mism]}"
 
-
-def test_unigram_logprob_bounded_vocab_matches_duckdb(spark, sf_dir, duck):
-    """The max_vocab (top-V + pooled OOV) path under an exact DuckDB twin
-    that applies the same truncation rule (count desc, word asc) — kept as
-    pytest rather than a registry entry so the 50-slot grading window
-    stays fully allocated."""
-    from pyspark.sql import functions as F
-
-    from bocadillo_spark.operators.cleanops import unigram_logprob
-
-    V = 50
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = _rowset(
-        ["doc_id", "n_tokens", "avg_logprob"],
-        [
-            (r["doc_id"], r["n_tokens"], r["avg_logprob"])
-            for r in unigram_logprob(docs, max_vocab=V).collect()
-        ],
-    )
-    sql = f"""WITH w AS (
-  SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
-  FROM documents),
-v AS (SELECT word, count(*) AS c FROM w GROUP BY word),
-topv AS (SELECT word, c FROM v ORDER BY c DESC, word ASC LIMIT {V}),
-oov AS (SELECT coalesce(sum(c), 0) AS oov_c FROM v WHERE word NOT IN (SELECT word FROM topv)),
-t AS (SELECT sum(c) AS total FROM v)
-SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(avg(ln(CAST(coalesce(topv.c, oov.oov_c) AS DOUBLE) / total)), 6) AS avg_logprob
-FROM w LEFT JOIN topv USING (word) CROSS JOIN oov CROSS JOIN t
-GROUP BY w.doc_id"""
-    rel = duck.sql(sql)
-    want = _rowset([d[0] for d in rel.description], rel.fetchall())
-    assert got == want

@@ -8,8 +8,7 @@ rule, Abbas et al. 2023), ties to min vec_id. Oversized clusters pass
 through un-deduped and are reported, never silently cut.
 
 The fixture passes explicit centroids so every assertion is
-reproducible with plain numpy (no dependence on pyspark.ml being
-importable), and the planted geometry is exact: 4 well-separated
+reproducible with plain numpy (independent of k-means training), and the planted geometry is exact: 4 well-separated
 centroid directions, vectors = centroid + small deterministic jitter,
 duplicates = tiny rotations of their original (cos > 0.999).
 """
@@ -167,8 +166,8 @@ def test_oversized_cluster_passes_through_and_is_reported(spark, frames):
 
 
 def test_kmeans_path_runs_when_available(spark, frames):
-    """Without supplied centroids semantic_dedup trains its own quantizer
-    (k-means or the stride fallback) — the output must still be a
+    """Without supplied centroids semantic_dedup trains its own k-means
+    quantizer — the output must still be a
     partition of the corpus with one keep per group."""
     _, rows, vecs, _ = frames
     out = semantic_dedup(vecs, n_clusters=4, eps=EPS).collect()

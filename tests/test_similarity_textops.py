@@ -144,14 +144,6 @@ def test_media_metadata_and_stubs(spark, sf_dir):
         assert thumbs[r["url"]] == (len(want), want)
 
 
-@pytest.mark.xfail(
-    reason="REVIEW_r06 fourth pass #3: media_metadata yields is_valid=NULL "
-    "(not False) for a NULL payload while n_bytes coalesces to 0 — a "
-    "'WHERE NOT is_valid' filter silently drops the row on both sides. "
-    "Fix (coalesce to False) staged for the r07 window: media_metadata is "
-    "r05-green and outside the full r06 grading window.",
-    strict=False,
-)
 def test_media_metadata_null_payload_invalid(spark):
     df = spark.createDataFrame(
         [("u0", None), ("u1", b"")],
@@ -306,13 +298,18 @@ def test_cleanops_empty_and_null_text_rows(spark):
     """The synthetic corpus has no empty/NULL text, so the empty-array
     guards in the cleanops chunkers are otherwise unexercised — pin them:
     zero-token docs must survive with zero chunks (not crash, not emit
-    phantom rows)."""
+    phantom rows). The word-model operators (token_entropy,
+    unigram_logprob, dsir_doc_scores; bigram_logprob in its own suite)
+    share one contract: '' and NULL text give no row, 'a b' gives
+    n_tokens == 2."""
     from pyspark.sql import functions as F
 
     from bocadillo_spark.operators.cleanops import (
         chunk_dedup,
+        dsir_doc_scores,
         pii_redaction,
         token_entropy,
+        unigram_logprob,
     )
 
     df = spark.createDataFrame(
@@ -325,10 +322,11 @@ def test_cleanops_empty_and_null_text_rows(spark):
     assert out[2]["n_chunks"] == 0 and out[2]["n_kept"] == 0
     assert out[3]["n_chunks"] == 1 and out[3]["n_kept"] == 1
 
-    # PII and entropy also tolerate empty/NULL text
+    # PII and the word models also tolerate empty/NULL text
     assert pii_redaction(df).count() == 3
-    ent = {r["doc_id"]: r for r in token_entropy(df).collect()}
-    assert 3 in ent and ent[3]["n_tokens"] == 2  # empty docs simply absent
+    for op in (token_entropy, unigram_logprob, dsir_doc_scores):
+        got = {r["doc_id"]: r["n_tokens"] for r in op(df).collect()}
+        assert got == {3: 2}, op.__name__  # empty docs simply absent
 
 
 def test_embedding_lsh_band_sizing_and_cap(spark, sf_dir):
